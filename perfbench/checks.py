@@ -9,9 +9,9 @@ and row order do not count).
 
 from __future__ import annotations
 
-import math
-
 import pandas as pd
+
+from tools.check_correctness import canon
 
 from .repogen import Package
 
@@ -77,22 +77,6 @@ def chat(pkg: Package, kind: str, arg: str | None, body: dict) -> bool:
     if kind == "unreachable":
         return sorted(_names(ans)) == sorted(f for f in pkg.functions if not pkg.callers(f))
     raise ValueError(f"unknown chat check {kind!r}")
-
-
-def canon(df: pd.DataFrame) -> pd.DataFrame:
-    df = df.reindex(sorted(df.columns), axis=1)
-    cdf = pd.DataFrame({c: df[c].map(_canon_val) for c in df.columns})
-    return cdf.sort_values(by=list(cdf.columns)).reset_index(drop=True)
-
-
-def _canon_val(v) -> str:
-    if v is None:
-        return ""
-    if isinstance(v, float):
-        return "" if math.isnan(v) else f"{v:.9g}"
-    if isinstance(v, (list, tuple)) or type(v).__name__ == "ndarray":
-        return "[" + ",".join(_canon_val(x) for x in v) + "]"
-    return str(v)
 
 
 def same_rows(engine: pd.DataFrame, oracle: pd.DataFrame) -> bool:

@@ -5,7 +5,8 @@ Set-up generates three packages of different sizes, ingests each with
 sends passes of 16 requests (6 neighbors, 3 entities, 3 paths, 2 chat,
 1 complete, 1 info; 7/6/3 on the big, middle and small repo) through
 `create_app(...).test_client()`: no socket, no server thread. Each pass is
-a fresh seeded draw, so requests rarely repeat.
+a fresh seeded draw, so requests rarely repeat. The mix and the split are
+chosen by hand, not taken from recorded traffic (NOTES.md).
 """
 
 from __future__ import annotations
@@ -23,6 +24,7 @@ PASS = ([("neighbors", "big")] * 3 + [("neighbors", "mid")] * 2 + [("neighbors",
         + [("entities", r) for r in REPOS] + [("paths", r) for r in REPOS]
         + [("chat", "big"), ("chat", "mid"), ("complete", "big"), ("info", "mid")])
 N_PASSES = 40
+PASS_S = 5.0  # nominal time of a pass on a 4-core host: two per 10 s run
 # Pass 1, the first traced pass of a traced run, asks the two questions
 # that reach an operator layer: cypher and unreachable.
 CHATS = ("count", "callees", "cypher", "unreachable", "callers")
@@ -124,11 +126,15 @@ def run(ctx) -> None:
         svc.analyze_folder(os.path.join(ctx.work, name), name)
     ctx.values["ingest_s"] = time.perf_counter() - t0
     ids = {}
+    files = 0  # File nodes the ingest stored: one per source file it parsed
     for name, pkg in truth.items():
-        rows = PropertyGraph.load(ctx.spark, svc.root, name).nodes.select("id", "name").collect()
+        rows = PropertyGraph.load(ctx.spark, svc.root, name).nodes.select(
+            "id", "name", "labels").collect()
         ids[name] = {r["name"]: r["id"] for r in rows}
+        files += sum("File" in r["labels"] for r in rows)
         ctx.tally.record(f"ids:{name}", len(ids[name]) == len(rows)
                          and set(ids[name]) == set(pkg.functions + pkg.file_names))
+    ctx.values["sources.files_parsed"] = files
     id_name = {name: {i: n for n, i in m.items()} for name, m in ids.items()}
 
     client = create_app(svc).test_client()
@@ -152,4 +158,4 @@ def run(ctx) -> None:
 
     for req in warm:
         one(req, False)
-    ctx.timed_passes([lambda p=p: [one(req, True) for req in p] for p in passes])
+    ctx.timed_passes([lambda p=p: [one(req, True) for req in p] for p in passes], PASS_S)

@@ -9,6 +9,14 @@ that registry modules which bind a kernel by name get the wrapper.
 A wrapper keeps the wrapped function's `__module__` and `__qualname__`
 and is what that name resolves to, so cloudpickle ships it to Python
 workers by reference; a worker imports the module unpatched.
+
+Most operators only build a plan and return a DataFrame; their caller
+runs it. So the first action (`collect`, `toPandas`, `count`) the caller
+runs after such an operator returns is timed under the operator's span
+too: `operators.out_neighbors` is plan build plus execution of its
+result. Ingest has no such hand-off (its plans run inside
+`PropertyGraph.save`), so `sources.*` spans time plan build only and the
+parse itself runs under `graph.save`.
 """
 
 from __future__ import annotations
@@ -17,12 +25,12 @@ import contextlib
 import functools
 import importlib
 import inspect
-import os
 import pkgutil
 import time
 from collections import defaultdict
 
 from py4j.protocol import Py4JJavaError
+from pyspark.sql.classic.dataframe import DataFrame
 
 _ACTIVE: "Tracer | None" = None
 
@@ -36,6 +44,12 @@ class Tracer:
         self.counts: dict[tuple[str, str | None], int] = defaultdict(int)
         self._stack: list[int] = []
         self.op: str | None = None
+        # (span name, caller's span index): the caller's next action on a
+        # DataFrame is timed under that name.
+        self.pending: tuple[str, int] | None = None
+
+    def top(self) -> int:
+        return self._stack[-1] if self._stack else -1
 
     def start(self, name: str) -> int:
         parent = self._stack[-1] if self._stack else -1
@@ -89,9 +103,11 @@ def active() -> Tracer | None:
     return _ACTIVE
 
 
-def _wrap(fn, name: str | None, count=None):
+def _wrap(fn, name: str | None, count=None, lazy: bool = False):
     """Records a span `name` (none if None); `count`, if given, is a pair
-    (counter name, function of the call's arguments) added to a count."""
+    (counter name, function of the call's arguments) added to a count.
+    If `lazy` and the call returns a DataFrame, the caller's next action
+    is timed under `name` as well."""
 
     @functools.wraps(fn)
     def wrapper(*args, **kwargs):
@@ -104,30 +120,46 @@ def _wrap(fn, name: str | None, count=None):
             return fn(*args, **kwargs)
         idx = tracer.start(name)
         try:
-            return fn(*args, **kwargs)
+            out = fn(*args, **kwargs)
         finally:
             tracer.end(idx)
+        if lazy and isinstance(out, DataFrame) and tracer.top() >= 0:
+            tracer.pending = (name, tracer.top())
+        return out
 
     return wrapper
 
 
-def _patch(owner, attr: str, name: str | None, count=None) -> None:
+def _action(fn):
+    """A DataFrame action: run under a pending operator's span if the
+    operator's caller runs it, straight through otherwise."""
+
+    @functools.wraps(fn)
+    def wrapper(self, *args, **kwargs):
+        tracer = _ACTIVE
+        pending = tracer.pending if tracer is not None else None
+        if pending is None or pending[1] != tracer.top():
+            return fn(self, *args, **kwargs)
+        tracer.pending = None
+        with tracer.span(pending[0]):
+            return fn(self, *args, **kwargs)
+
+    return wrapper
+
+
+def _patch(owner, attr: str, name: str | None, count=None, lazy: bool = False) -> None:
     raw = inspect.getattr_static(owner, attr)
     if isinstance(raw, (classmethod, staticmethod)):
-        setattr(owner, attr, type(raw)(_wrap(raw.__func__, name, count)))
+        setattr(owner, attr, type(raw)(_wrap(raw.__func__, name, count, lazy)))
     else:
-        setattr(owner, attr, _wrap(raw, name, count))
-
-
-def _tree_sources(service, path, *args, **kwargs) -> int:
-    """Source files analyze_folder scans: its extensions, outside .git."""
-    return sum(f.endswith((".py", ".java", ".cs", ".c"))
-               for d, _, files in os.walk(path) if "/.git" not in d for f in files)
+        setattr(owner, attr, _wrap(raw, name, count, lazy))
 
 
 def _public_functions(module):
+    """Public functions defined in `module`, less the `*_sql` builders of
+    oracle SQL text."""
     return [n for n, f in vars(module).items()
-            if inspect.isfunction(f) and not n.startswith("_")
+            if inspect.isfunction(f) and not n.startswith("_") and not n.endswith("_sql")
             and f.__module__ == module.__name__]
 
 
@@ -136,25 +168,27 @@ def install() -> None:
     from code_graph_backend_spark import cypher, functions
     from code_graph_backend_spark.graph.model import PropertyGraph
     from code_graph_backend_spark.mutations.oplog import OpLog
-    from code_graph_backend_spark.operators import aggregates, neighbors, search, traversal
+    from code_graph_backend_spark.operators import (aggregates, components, hits, labelprop,
+                                                    neighbors, pagerank, search, traversal)
     from code_graph_backend_spark.service import api
     from code_graph_backend_spark.sources import python_analyzer, source_scan
 
     for method in ("repo_info", "graph_entities", "get_neighbors", "auto_complete",
                    "find_paths", "chat"):
         _patch(api.CodeGraphService, method, "service.method")
-    _patch(api.CodeGraphService, "analyze_folder", "service.method",
-           ("sources.files_parsed", _tree_sources))
+    _patch(api.CodeGraphService, "analyze_folder", "service.method")
     _patch(api.RepoInfoStore, "get", "service.info_store_get")
     _patch(PropertyGraph, "load", "graph.load")
     _patch(PropertyGraph, "save", "graph.save")
     for fn in _public_functions(neighbors):
-        _patch(neighbors, fn, f"operators.{fn}")
-    _patch(traversal, "find_paths", "operators.find_paths")
-    _patch(search, "auto_complete", "operators.auto_complete")
-    _patch(aggregates, "counts", "operators.counts")
+        _patch(neighbors, fn, f"operators.{fn}", lazy=True)
+    _patch(traversal, "find_paths", "operators.find_paths", lazy=True)
+    _patch(search, "auto_complete", "operators.auto_complete", lazy=True)
+    _patch(aggregates, "counts", "operators.counts", lazy=True)
     api.counts = aggregates.counts  # the service binds it by name at import
-    _patch(cypher, "run_cypher", "cypher.run")
+    _patch(cypher, "run_cypher", "cypher.run", lazy=True)
+    for attr in ("collect", "toPandas", "count"):
+        setattr(DataFrame, attr, _action(getattr(DataFrame, attr)))
     _patch(source_scan, "scan_source_tree", "sources.scan")
     _patch(python_analyzer, "parse_files", "sources.parse")
     _patch(python_analyzer, "graph_from_parsed", "sources.graph_build")
@@ -164,6 +198,10 @@ def install() -> None:
         module = importlib.import_module(f"{functions.__name__}.{info.name}")
         for fn in _public_functions(module):
             _patch(module, fn, "functions.kernel")
+    # The graph kernels the registry's graph_* and dedup queries call.
+    for module in (hits, labelprop, pagerank, components):
+        for fn in _public_functions(module):
+            _patch(module, fn, "operators.kernel")
 
 
 class SparkStats:

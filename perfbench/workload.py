@@ -11,6 +11,7 @@ from __future__ import annotations
 import argparse
 import contextlib
 import json
+import math
 import os
 import shutil
 import statistics
@@ -72,17 +73,16 @@ class Run:
         if not self._in_traced_pass:
             self.samples.append((kind, seconds))
 
-    def timed_passes(self, passes: list) -> None:
-        """Runs passes until `seconds` have gone by: at least one; in a
-        traced run at least three, alternating untraced and traced."""
+    def timed_passes(self, passes: list, pass_s: float) -> None:
+        """Runs ceil(seconds / pass_s) passes, `pass_s` being a pass's
+        nominal time on a 4-core host, so a run's work does not depend on
+        the host's speed: at least one; in a traced run at least three,
+        alternating untraced and traced."""
         self.first_op = time.time()
         self.values["load1m"] = os.getloadavg()[0]
         steal0, total0 = _stat_ticks()
-        start = time.perf_counter()
-        for i, body in enumerate(passes):
-            min_passes = 3 if self.tracer else 1
-            if i >= min_passes and time.perf_counter() - start >= self.seconds:
-                break
+        n = max(3 if self.tracer else 1, math.ceil(self.seconds / pass_s))
+        for i, body in enumerate(passes[:n]):
             traced = self.tracer is not None and i % 2 == 1
             self._in_traced_pass = traced
             tracing.activate(self.tracer if traced else None)
@@ -109,8 +109,9 @@ class Run:
         }
         for kind in {k for k, _ in self.samples}:  # e.g. neighbors_p50_ms
             out[f"{kind}_p50_ms"] = statistics.median(s for k, s in self.samples if k == kind) * 1e3
-        if "ingest_s" in self.values:
-            out["ingest_s"] = self.values["ingest_s"]
+        for key in ("ingest_s", "sources.files_parsed"):
+            if key in self.values:
+                out[key] = self.values[key]
         if self.tracer:
             out.update(self._layers())
         return out
@@ -121,16 +122,15 @@ class Run:
         per_op = self.tracer.self_ms(ops)
         per_op_calls = self.tracer.calls(ops)
         whole = self.tracer.self_ms()
-        calls = self.tracer.calls()
         out = {f"{name}_ms": ms / n for name, ms in per_op.items()
                if not name.startswith(("sources.", "graph.save"))}
         out.update({
             "graph.load_calls_per_op": per_op_calls.get("graph.load", 0) / n,
             "functions.calls": per_op_calls.get("functions.kernel", 0) / n,
+            "operators.kernel_calls": per_op_calls.get("operators.kernel", 0) / n,
             "mutations.ops_replayed": per_op_calls.get("mutations.ops_replayed", 0) / n,
             "service.info_store_calls": per_op_calls.get("service.info_store_get", 0) / n,
             "graph.save_ms": whole.get("graph.save", 0.0),
-            "sources.files_parsed": calls.get("sources.files_parsed", 0),
         })
         for name in ("sources.scan", "sources.parse", "sources.graph_build"):
             out[f"{name}_ms"] = whole.get(name, 0.0)
