@@ -28,7 +28,7 @@ QUERIES = CORE + KERNELS
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 N_PASSES = 20
-PASS_S = 11.0  # nominal time of a pass on a 4-core host: one per 10 s run
+PASS_S = 13.5  # nominal time of a pass on a 4-core host: one per 20 s run
 
 
 def generate(seed: int, out_dir: str) -> list[list[str]]:

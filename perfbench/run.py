@@ -1,6 +1,6 @@
 """Benchmark entry point.
 
-    python3 perfbench/run.py --workload serve_read --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload serve_read --seed 1 --seconds 20 --trace 0
 
 Run from the root of a checkout. Starts one workload process
 (perfbench/workload.py) in a session of its own, with Spark pointed at a

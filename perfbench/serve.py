@@ -1,12 +1,14 @@
 """serve_read: one client in a closed loop over the HTTP routes.
 
 Set-up generates three packages of different sizes, ingests each with
-`analyze_folder`, then sends one untimed pass of requests. The timed part
+`analyze_folder`, then sends 16 untimed requests that ask each kind on
+each repo, and each chat question, once. The timed part
 sends passes of 16 requests (6 neighbors, 3 entities, 3 paths, 2 chat,
 1 complete, 1 info; 7/6/3 on the big, middle and small repo) through
 `create_app(...).test_client()`: no socket, no server thread. Each pass is
-a fresh seeded draw, so requests rarely repeat. The mix and the split are
-chosen by hand, not taken from recorded traffic (NOTES.md).
+a fresh seeded draw, and no request names a function an earlier request of
+its kind named on that repo. The mix and the split are chosen by hand, not
+taken from recorded traffic (NOTES.md).
 """
 
 from __future__ import annotations
@@ -24,49 +26,93 @@ PASS = ([("neighbors", "big")] * 3 + [("neighbors", "mid")] * 2 + [("neighbors",
         + [("entities", r) for r in REPOS] + [("paths", r) for r in REPOS]
         + [("chat", "big"), ("chat", "mid"), ("complete", "big"), ("info", "mid")])
 N_PASSES = 40
-PASS_S = 5.0  # nominal time of a pass on a 4-core host: two per 10 s run
-# Pass 1, the first traced pass of a traced run, asks the two questions
+PASS_S = 6.5  # nominal time of a pass on a 4-core host: three per 20 s run
+# Pass k asks the big repo question 2k and the middle one question 2k+1,
+# in turn. Pass 1, the first traced pass of a traced run, asks the two
 # that reach an operator layer: cypher and unreachable.
 CHATS = ("count", "callees", "cypher", "unreachable", "callers")
 
 
-def _path_pair(rng: random.Random, pkg: repogen.Package, want_paths: bool) -> tuple[str, str]:
-    """A (src, dst) pair with 1-8 call paths, or with none. Failing that
-    after 64 draws: the last draw, or a pair with no path."""
-    order = pkg.functions
+class _Fresh:
+    """Seeded draws that do not repeat: each (kind, repo) takes functions
+    from its own shuffled deck and reshuffles only when the deck is used
+    up, so within a run's first passes no request names a function that an
+    earlier request of its kind and repo named (a per-target plan or result
+    cache never hits), and every run sees the same share of repeats."""
+
+    def __init__(self, rng: random.Random):
+        self.rng = rng
+        self.decks: dict[tuple[str, str], list[str]] = {}
+        self.seen: set[tuple[str, str, str]] = set()
+
+    def function(self, kind: str, repo: str, pkg: repogen.Package) -> str:
+        deck = self.decks.get((kind, repo))
+        if not deck:
+            deck = self.decks[kind, repo] = self.rng.sample(pkg.functions, len(pkg.functions))
+        return deck.pop()
+
+    def unseen(self, kind: str, repo: str, key: str) -> bool:
+        """True the first time (kind, repo, key) is asked about."""
+        new = (kind, repo, key) not in self.seen
+        self.seen.add((kind, repo, key))
+        return new
+
+
+def _path_pair(rng: random.Random, fresh: _Fresh, repo: str, pkg: repogen.Package,
+               want_paths: bool) -> tuple[str, str]:
+    """A (src, dst) pair with 1-8 call paths, or with none, of functions
+    no earlier path request on the repo named. Failing that after 64
+    draws: the last draw, or a pair with no path."""
+    order = [f for f in pkg.functions if ("paths", repo, f) not in fresh.seen]
+    if len(order) < 2:
+        fresh.seen -= {("paths", repo, f) for f in pkg.functions}
+        order = pkg.functions
     for _ in range(64):
         i = rng.randrange(len(order) - 1)
         src, dst = order[i], order[rng.randrange(i + 1, min(len(order), i + 40))]
         if (1 <= len(pkg.paths(src, dst, checks.MAX_DEPTH)) <= 8) == want_paths:
-            return src, dst
-    return (src, dst) if want_paths else (order[-1], order[0])  # a DAG: no path back
+            break
+    else:
+        if not want_paths:
+            src, dst = order[-1], order[0]  # a DAG: no path back
+    fresh.unseen("paths", repo, src)
+    fresh.unseen("paths", repo, dst)
+    return src, dst
 
 
-def _request(rng: random.Random, kind: str, repo: str, pkg: repogen.Package, chat: str) -> list:
-    fn = rng.choice(pkg.functions)
+def _request(rng: random.Random, fresh: _Fresh, kind: str, repo: str,
+             pkg: repogen.Package, chat: str) -> list:
     if kind == "neighbors":
-        return [kind, repo, fn]
+        return [kind, repo, fresh.function(kind, repo, pkg)]
     if kind == "paths":  # the small repo's pair has no path
-        return [kind, repo, *_path_pair(rng, pkg, repo != "small")]
+        return [kind, repo, *_path_pair(rng, fresh, repo, pkg, repo != "small")]
     if kind == "complete":
-        return [kind, repo, fn[: rng.choice((2, 3, 5, 7))]]
+        for _ in range(64):
+            prefix = fresh.function(kind, repo, pkg)[: rng.choice((2, 3, 5, 7))]
+            if fresh.unseen(kind, repo, prefix):
+                break
+        return [kind, repo, prefix]
     if kind == "chat":
-        return [kind, repo, chat, fn]
+        return [kind, repo, chat, fresh.function(kind, repo, pkg)]
     return [kind, repo]
 
 
 def generate(seed: int) -> tuple[dict, list[list], list[list[list]]]:
-    """The packages by repo name, the warm-up pass and the request passes. Pass k asks chat questions k*2 and k*2+1 of
-    CHATS, in turn."""
+    """The packages by repo name, the warm-up pass and the request passes."""
     rng = random.Random(seed)
     repos = {name: repogen.make_package(rng, *size) for name, size in REPOS.items()}
-    warm = [_request(rng, k, r, repos[r], "count") for k, r in PASS]
+    fresh = _Fresh(rng)
+    # Warm-up: each (kind, repo) of a pass once, and each chat question
+    # once, so no timed pass is the first to ask anything.
+    warm = [_request(rng, fresh, k, r, repos[r], "") for k, r in dict.fromkeys(PASS) if k != "chat"]
+    warm += [_request(rng, fresh, "chat", ("big", "mid")[j % 2], repos[("big", "mid")[j % 2]], q)
+             for j, q in enumerate(CHATS)]
     passes = []
     for i in range(N_PASSES):
-        chats = iter(CHATS[j % len(CHATS)] for j in (2 * i, 2 * i + 1))
+        chats = {"big": CHATS[2 * i % len(CHATS)], "mid": CHATS[(2 * i + 1) % len(CHATS)]}
         plan = PASS[:]
         rng.shuffle(plan)
-        passes.append([_request(rng, k, r, repos[r], next(chats) if k == "chat" else "")
+        passes.append([_request(rng, fresh, k, r, repos[r], chats.get(r, ""))
                        for k, r in plan])
     return repos, warm, passes
 
@@ -154,7 +200,7 @@ def run(ctx) -> None:
         ok = status != 0 and check(truth[req[1]], id_name[req[1]], req, status, body)
         ctx.tally.record(" ".join(map(str, req)), ok)
         if timed:
-            ctx.sample(req[0], lat)
+            ctx.sample(req[0], lat, f"{req[0]}:{req[1]}")
 
     for req in warm:
         one(req, False)

@@ -56,6 +56,27 @@ def test_other_seed_gives_other_inputs():
     assert not a["lineitem"].equals(b["lineitem"])
 
 
+def test_early_passes_name_no_target_twice():
+    _, warm, passes = serve.generate(7)
+    seen = set()
+    for req in warm + [r for p in passes[:6] for r in p]:
+        kind, repo, *args = req
+        names = args[1:] if kind == "chat" else args
+        for name in names:
+            assert (kind, repo, name) not in seen, req
+            seen.add((kind, repo, name))
+
+
+def test_pass_time_takes_each_slot_at_its_median():
+    from perfbench.workload import Run
+
+    run = Run(None, 1, 20.0, False, "")
+    run.pass_walls = [(False, 1.0)] * 3
+    run.samples = [("a", "a", s) for s in (1.0, 1.0, 9.0)]  # one stall
+    run.samples += [("b", "b:x", s) for s in (2.0, 2.0, 2.0, 3.0, 3.0, 3.0)]  # two a pass
+    assert run.pass_s() == pytest.approx(1.0 + 2 * 2.5)
+
+
 @pytest.fixture(scope="module")
 def pkg():
     return repogen.make_package(random.Random(3), 4, 6)

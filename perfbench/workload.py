@@ -37,7 +37,7 @@ class Run:
     def __init__(self, spark, seed: int, seconds: float, trace: bool, work: str):
         self.spark, self.seed, self.seconds, self.work = spark, seed, seconds, work
         self.tally = checks.Tally()
-        self.samples: list[tuple[str, float]] = []
+        self.samples: list[tuple[str, str, float]] = []  # (kind, slot, s)
         self.pass_walls: list[tuple[bool, float]] = []  # (traced, wall s)
         self.values: dict = {}
         self.first_op: float | None = None
@@ -68,20 +68,22 @@ class Run:
         if self._in_traced_pass:
             self.stats.group(f"{self.tracer.op}:{name}")
 
-    def sample(self, kind: str, seconds: float) -> None:
-        """Latency of a timed op; ops of traced passes are not sampled."""
+    def sample(self, kind: str, seconds: float, slot: str | None = None) -> None:
+        """Latency of a timed op. `slot` names the op's place in a pass
+        (every pass holds the same slots); ops of traced passes are not
+        sampled."""
         if not self._in_traced_pass:
-            self.samples.append((kind, seconds))
+            self.samples.append((kind, slot or kind, seconds))
 
     def timed_passes(self, passes: list, pass_s: float) -> None:
-        """Runs ceil(seconds / pass_s) passes, `pass_s` being a pass's
+        """Runs as many passes as fit in `seconds` at `pass_s`, a pass's
         nominal time on a 4-core host, so a run's work does not depend on
         the host's speed: at least one; in a traced run at least three,
         alternating untraced and traced."""
         self.first_op = time.time()
         self.values["load1m"] = os.getloadavg()[0]
         steal0, total0 = _stat_ticks()
-        n = max(3 if self.tracer else 1, math.ceil(self.seconds / pass_s))
+        n = max(3 if self.tracer else 1, math.floor(self.seconds / pass_s))
         for i, body in enumerate(passes[:n]):
             traced = self.tracer is not None and i % 2 == 1
             self._in_traced_pass = traced
@@ -97,18 +99,28 @@ class Run:
         steal1, total1 = _stat_ticks()
         self.values["steal_pct"] = 100.0 * (steal1 - steal0) / max(total1 - total0, 1)
 
+    def pass_s(self) -> float:
+        """The time of one pass, each of its ops at the median latency of
+        its slot over the untraced passes: one slow op (a GC pause, a host
+        stall) moves it no more than any other op does."""
+        passes = sum(not traced for traced, _ in self.pass_walls)
+        slots: dict[str, list[float]] = {}
+        for _, slot, s in self.samples:
+            slots.setdefault(slot, []).append(s)
+        return sum(statistics.median(v) * len(v) / passes for v in slots.values())
+
     def metrics(self) -> dict[str, float]:
-        lat = [s for _, s in self.samples]
+        lat = [s for _, _, s in self.samples]
         out = {
             "setup_s": self.first_op - T0,
-            "wall_s": statistics.median(w for traced, w in self.pass_walls if not traced),
+            "wall_s": self.pass_s(),
             "op_p50_ms": statistics.median(lat) * 1e3,
             "fail_frac": self.tally.fail_frac,
             "host.load1m": self.values["load1m"],
             "host.steal_pct": self.values["steal_pct"],
         }
-        for kind in {k for k, _ in self.samples}:  # e.g. neighbors_p50_ms
-            out[f"{kind}_p50_ms"] = statistics.median(s for k, s in self.samples if k == kind) * 1e3
+        for kind in {k for k, _, _ in self.samples}:  # e.g. neighbors_p50_ms
+            out[f"{kind}_p50_ms"] = statistics.median(s for k, _, s in self.samples if k == kind) * 1e3
         for key in ("ingest_s", "sources.files_parsed"):
             if key in self.values:
                 out[key] = self.values[key]
