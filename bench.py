@@ -224,9 +224,15 @@ def main() -> None:
         # cpu-keyed copy so each configuration's full summary survives;
         # bench_summary.json stays as the latest-run alias and the stdout
         # line is unchanged.
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "default")
-        with open(os.path.join(here, f"bench_summary_c{cpus}.json"), "w") as fh:
-            fh.write(summary + "\n")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(
+            spark.sparkContext.defaultParallelism
+        )
+        if cpus.isdigit():
+            with open(os.path.join(here, f"bench_summary_c{cpus}.json"), "w") as fh:
+                fh.write(summary + "\n")
+        else:
+            print(f"bench: core count {cpus!r} is not an integer; "
+                  "no per-core summary written", file=sys.stderr)
     except Exception:
         pass
     # The snapshot is the overwrite-proof close artifact BENCH_NOTES

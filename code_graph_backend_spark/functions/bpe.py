@@ -33,6 +33,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..memo import cached
+
 
 def _word_table(docs: DataFrame, text_col: str) -> DataFrame:
     """(word, cnt, w) — w is the space-joined character-symbol string."""
@@ -48,19 +50,6 @@ def _word_table(docs: DataFrame, text_col: str) -> DataFrame:
     )
 
 
-# Trained-tokenizer memo, keyed by (Spark application id, corpus plan's
-# semantic hash): the merge table and tokenized vocabulary are a trained
-# MODEL (the typed-edge-memo precedent — serving state, not query
-# scratch), so bpe_train_merges and bpe_apply_token_counts over the same
-# corpus share one training run. The application id in the key scopes
-# entries to their session — localCheckpointed DataFrames die with the
-# SparkContext, so a later session reading the same corpus must retrain,
-# not resurrect dead checkpoint blocks. True LRU (hits refresh recency);
-# bounded so long sessions can't accumulate checkpoints.
-_TRAIN_MEMO: dict[tuple, tuple] = {}
-_TRAIN_MEMO_CAP = 4
-
-
 def bpe_train(
     docs: DataFrame,
     n_merges: int = 4,
@@ -71,19 +60,20 @@ def bpe_train(
     training order; words = the post-training word table (word, cnt, w)
     with w the space-joined symbol sequence — i.e. the trained tokenizer
     APPLIED to the vocabulary, which is how merges are applied to a
-    corpus at scale (per distinct word once, then joined back)."""
+    corpus at scale (per distinct word once, then joined back).
+
+    The trained model is serving state, not query scratch: it is kept
+    per (session, corpus DataFrame, n_merges, text_col) through
+    memo.cached, so bpe_train_merges and bpe_apply_token_counts over
+    the same corpus share one training run."""
+    return cached(
+        docs.sparkSession, ("bpe", docs, n_merges, text_col),
+        lambda: _bpe_train(docs, n_merges, text_col),
+    )
+
+
+def _bpe_train(docs: DataFrame, n_merges: int, text_col: str):
     spark: SparkSession = docs.sparkSession
-    try:
-        memo_key = (
-            spark.sparkContext.applicationId,
-            docs.semanticHash(), n_merges, text_col,
-        )
-    except Exception:
-        memo_key = None
-    if memo_key is not None and memo_key in _TRAIN_MEMO:
-        hit = _TRAIN_MEMO.pop(memo_key)
-        _TRAIN_MEMO[memo_key] = hit  # refresh recency (LRU)
-        return hit
     wt = _word_table(docs, text_col).localCheckpoint(eager=True)
     rules = []
     for r in range(1, n_merges + 1):
@@ -146,16 +136,6 @@ def bpe_train(
     rules_df = spark.createDataFrame(
         rules, "merge_round int, lhs string, rhs string, new_symbol string, pair_count long"
     )
-    if memo_key is not None:
-        while len(_TRAIN_MEMO) >= _TRAIN_MEMO_CAP:
-            _, evicted_wt = _TRAIN_MEMO.pop(next(iter(_TRAIN_MEMO)))
-            try:
-                # free the checkpoint blocks now rather than waiting on
-                # Python GC + the ContextCleaner to notice the dead ref
-                evicted_wt.unpersist()
-            except Exception:
-                pass
-        _TRAIN_MEMO[memo_key] = (rules_df, wt)
     return rules_df, wt
 
 

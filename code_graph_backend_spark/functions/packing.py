@@ -37,6 +37,17 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
+def _join_carry(d: DataFrame, offsets: DataFrame, bucket_col: str) -> DataFrame:
+    """d ⋈ broadcast(offsets) on a NULL-safe bucket match; the columns
+    come out as a USING join lays them out (bucket first)."""
+    off = offsets.withColumnRenamed(bucket_col, "_bkey")
+    cols = [bucket_col] + [c for c in d.columns if c != bucket_col]
+    cols += [c for c in off.columns if c != "_bkey"]
+    return d.join(
+        F.broadcast(off), F.col(bucket_col).eqNullSafe(F.col("_bkey"))
+    ).select(*cols)
+
+
 def two_level_prefix_sum(
     d: DataFrame,
     value_col: str,
@@ -88,14 +99,10 @@ def two_level_prefix_sum(
     pick the bucket width so value ranges split ties where the key
     allows it.
 
-    PRECONDITION: `bucket_col` (and hence the metric it derives from)
-    must be NON-NULL on every row. The offsets join back to the data is
-    an inner equi-join on the bucket key, so a NULL bucket row would be
-    silently DROPPED here — whereas a flat NTILE/window oracle would
-    rank nulls first. Every current call site derives the bucket from a
-    non-null metric; a future nullable call site must pre-filter or
-    null-fill the metric (or switch this join to eqNullSafe and define
-    where the null bucket sits in the global order)."""
+    NULL buckets: the offsets join back to the data is NULL-safe, so
+    rows whose bucket is NULL are kept; the NULL bucket sorts FIRST in
+    the global order (the carry-in window's ascending order puts it
+    there), which is where a flat ascending window ranks nulls."""
     wb = (
         Window.partitionBy(bucket_col)
         .orderBy(*order_by)
@@ -109,7 +116,7 @@ def two_level_prefix_sum(
         "_boff", F.coalesce(F.sum("_btot").over(wo), F.lit(0))
     ).select(bucket_col, "_boff")
     return (
-        d.join(F.broadcast(offsets), bucket_col)
+        _join_carry(d, offsets, bucket_col)
         .withColumn(out_col, (F.col("_boff") + F.col("_cum_in_bucket")).cast("long"))
         .drop("_cum_in_bucket", "_boff")
     )
@@ -124,7 +131,7 @@ def two_level_prefix_max(
 ) -> DataFrame:
     """Distributed global RUNNING MAX over an arbitrary total order —
     the max-monoid twin of two_level_prefix_sum (same order-aligned
-    bucket contract, same NON-NULL bucket/metric precondition, same
+    bucket contract, same NULL-bucket-first placement, same
     shape, same shared explicit bucket repartition read by both
     branches — two identical static Exchange copies deduplicated at
     runtime by AQE stage reuse, one evaluation of `d`): per-bucket
@@ -147,7 +154,7 @@ def two_level_prefix_max(
         bucket_col, "_bcarry"
     )
     return (
-        d.join(F.broadcast(offsets), bucket_col)
+        _join_carry(d, offsets, bucket_col)
         .withColumn(
             out_col,
             F.greatest(

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..memo import cached
 from ..session import read_table
 from .model import PropertyGraph
 
@@ -121,22 +122,18 @@ def build_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).unionByName(supp_nation).unionByName(nation_region).unionByName(nxt)
 
 
-# One resident graph per (session, sf_dir) — the FalkorDB-analogue of an
-# in-memory graph, here as cached DataFrames. All read queries share the
-# same InMemoryRelation instead of re-scanning parquet per query; on a
-# cluster this is `spark.catalog.cacheTable` on the nodes/edges tables.
-_GRAPH_CACHE: dict[tuple[int, str], PropertyGraph] = {}
-
-
 def build_graph(spark: SparkSession, sf_dir: str) -> PropertyGraph:
-    key = (id(spark), sf_dir.rstrip("/"))
-    hit = _GRAPH_CACHE.get(key)
-    if hit is not None:
-        return hit
-    g = _build_graph_uncached(spark, sf_dir)
-    g = PropertyGraph(spark, g.name, g.nodes.cache(), g.edges.cache())
-    _GRAPH_CACHE[key] = g
-    return g
+    """The resident graph for (session, sf_dir) — the FalkorDB analogue
+    of an in-memory graph, here as cached DataFrames. All read queries
+    share the same InMemoryRelation instead of re-scanning parquet per
+    query; on a cluster this is `spark.catalog.cacheTable` on the
+    nodes/edges tables."""
+
+    def build() -> PropertyGraph:
+        g = _build_graph_uncached(spark, sf_dir)
+        return PropertyGraph(spark, g.name, g.nodes.cache(), g.edges.cache())
+
+    return cached(spark, ("graph", sf_dir.rstrip("/")), build)
 
 
 def _build_graph_uncached(spark: SparkSession, sf_dir: str) -> PropertyGraph:

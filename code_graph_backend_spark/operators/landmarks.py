@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..memo import cached
+
 # measured-size duality gate: at or below these the batched BFS runs
 # driver-local on the shared array cache. Module-level (and overridable
 # per call via `local_caps`) so tests can force the distributed branch
@@ -35,27 +37,6 @@ from pyspark.sql import functions as F
 # first-executed in production (mst.py / mis.py convention).
 _LOCAL_N_CAP = 2_000_000
 _LOCAL_E_CAP = 5_000_000
-
-# Session-scoped result memo, the und_cached / walk-table discipline
-# (VERDICT r8 item 3 applied to the landmark family): three registry
-# queries (graph_landmark_distances, graph_closeness_approx,
-# graph_eccentricity_bounds) consume the identical (nodes, edges, 8, 3)
-# BFS off the resident graph cache, and each was re-running it —
-# which also made their suite cost depend on rotation order. Keyed by
-# object identity of the resident tables; values pin the sources so
-# id() cannot be recycled; oldest-first eviction (operators/
-# undirected._evict_oldest rationale) — but the unpersist is DEFERRED
-# one eviction generation (ADVICE r10): a caller that received the
-# memoized DataFrame may still be mid-action when a later call with
-# fresh params evicts it, and an immediate unpersist would silently
-# drop its cached blocks (recompute, not corruption — but the memo's
-# whole purpose is not recomputing). Evicted entries park in
-# _LD_RETIRED and are only unpersisted on the NEXT eviction cycle, by
-# which point any consumer of the previous generation has returned.
-_LD_MEMO: dict = {}
-_LD_CAP = 8
-_LD_RETIRED: list = []
-
 
 def landmark_distances(
     nodes: DataFrame,
@@ -66,34 +47,20 @@ def landmark_distances(
 ) -> DataFrame:
     """(landmark, node, dist) for every node within `hops` of a landmark,
     following edge direction (src -> dst). dist = exact hop count
-    (min over paths), landmarks = the `n_landmarks` smallest node ids."""
+    (min over paths), landmarks = the `n_landmarks` smallest node ids.
+
+    Persisted once per (session, nodes, edges, parameters) through
+    memo.cached: three registry queries (graph_landmark_distances,
+    graph_closeness_approx, graph_eccentricity_bounds) consume the
+    identical (nodes, edges, 8, 3) BFS off the resident graph."""
     if local_caps is None:
         local_caps = (_LOCAL_N_CAP, _LOCAL_E_CAP)
-    key = (
-        id(nodes.sparkSession), id(nodes), id(edges),
-        n_landmarks, hops, local_caps,
+    return cached(
+        nodes.sparkSession, ("landmarks", nodes, edges, n_landmarks, hops, local_caps),
+        lambda: _landmark_distances_uncached(
+            nodes, edges, n_landmarks, hops, local_caps
+        ).persist(),
     )
-    hit = _LD_MEMO.get(key)
-    if hit is not None:
-        return hit[2]
-    out = _landmark_distances_uncached(
-        nodes, edges, n_landmarks, hops, local_caps
-    ).persist()
-    if len(_LD_MEMO) >= _LD_CAP:
-        # drain the PREVIOUS generation's retirees first — anything
-        # parked there was evicted at least one call ago and no
-        # in-flight consumer can still hold it (calls are synchronous)
-        for old in _LD_RETIRED:
-            try:
-                old.unpersist()
-            except Exception:
-                pass
-        _LD_RETIRED.clear()
-        while len(_LD_MEMO) >= _LD_CAP:
-            _, _, old = _LD_MEMO.pop(next(iter(_LD_MEMO)))
-            _LD_RETIRED.append(old)
-    _LD_MEMO[key] = ((nodes, edges), key, out)
-    return out
 
 
 def _landmark_distances_uncached(

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..memo import cached
 from ..scratch import scratch_persist
 from .components import _parts_for
 from .undirected import und_cached
@@ -213,7 +214,17 @@ def boruvka_msf(
     ).orderBy("round", "w", "u", "v")
 
 
-_EK_MEMO: dict[tuple, tuple] = {}
+def _edge_keys(u, v, w):
+    """(ek, idx_by_rank): ek = w*ne + rank of (u, v), and the edge row
+    of each rank."""
+    import numpy as np
+
+    ne = len(u)
+    rank = np.empty(ne, dtype=np.int64)
+    rank[np.lexsort((v, u))] = np.arange(ne)
+    idx_by_rank = np.empty(ne, dtype=np.int64)
+    idx_by_rank[rank] = np.arange(ne)
+    return w * ne + rank, idx_by_rank
 
 
 def _msf_local(
@@ -244,19 +255,7 @@ def _msf_local(
     # (u, v) once — pairs are distinct, so ek = w*ne + rank orders
     # exactly like (w, u, v) and every later group-min is single-key;
     # pure function of the cached arrays, memoized alongside them
-    ekk = ("ek", id(spark), id(edges))
-    hit = _EK_MEMO.get(ekk)
-    if hit is not None and hit[0] is edges:
-        ek, idx_by_rank = hit[1], hit[2]
-    else:
-        rank = np.empty(ne, dtype=np.int64)
-        rank[np.lexsort((v, u))] = np.arange(ne)
-        ek = w * ne + rank
-        idx_by_rank = np.empty(ne, dtype=np.int64)
-        idx_by_rank[rank] = np.arange(ne)
-        while len(_EK_MEMO) >= 4:
-            _EK_MEMO.pop(next(iter(_EK_MEMO)))  # oldest-first
-        _EK_MEMO[ekk] = (edges, ek, idx_by_rank)
+    ek, idx_by_rank = cached(spark, ("ek", edges), lambda: _edge_keys(u, v, w))
     comp = ids.copy()  # component label per node position
     out_r, out_u, out_v, out_w = [], [], [], []
     for t in range(1, rounds + 1):

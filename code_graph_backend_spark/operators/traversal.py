@@ -23,52 +23,10 @@ documented.
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# (edges DataFrame → {edge_type → materialized edge-set entry}); see
-# _typed_edges. Weak keys: an entry lives exactly as long as its graph.
-_EDGE_MEMO: "weakref.WeakKeyDictionary[DataFrame, dict]" = weakref.WeakKeyDictionary()
-
-# Resident-cache discipline: the memo may not grow without bound in a
-# long-lived session (a service traverses many graphs over days). LRU-cap
-# the total number of materialized entries; eviction unpersists the cached
-# edge set and drops the driver-side adjacency so memory is actually
-# returned. The cap covers "every edge type of a handful of live graphs" —
-# eviction is the rare path.
-_EDGE_MEMO_CAP = 32
-_EDGE_MEMO_LRU: "list[tuple[weakref.ref, str | None]]" = []
-
-
-def _memo_entry_count() -> int:
-    return sum(len(per) for per in _EDGE_MEMO.values())
-
-
-def _memo_touch(edges: DataFrame, edge_type: str | None) -> None:
-    """Move (edges, type) to MRU position; evict LRU entries over the cap."""
-    ref = weakref.ref(edges)
-    _EDGE_MEMO_LRU[:] = [
-        (r, t) for (r, t) in _EDGE_MEMO_LRU
-        if r() is not None and not (r() is edges and t == edge_type)
-    ]
-    _EDGE_MEMO_LRU.append((ref, edge_type))
-    while _memo_entry_count() > _EDGE_MEMO_CAP and _EDGE_MEMO_LRU:
-        r, t = _EDGE_MEMO_LRU.pop(0)
-        victim = r()
-        if victim is None:
-            continue
-        per = _EDGE_MEMO.get(victim)
-        if per is None or t not in per:
-            continue
-        entry = per.pop(t)
-        try:
-            entry["df"].unpersist()
-        except Exception:
-            pass
-        entry["derived"].clear()
-        entry["pdf"] = None
+from ..memo import cached
 
 # Rows per partition to aim for in iterative intermediates. Frontiers are
 # narrow (a few longs per row), so 100k rows ≈ a few MB — far below a
@@ -99,33 +57,26 @@ def _typed_edges(edges: DataFrame, edge_type: str | None) -> dict:
     The reference serves traversals from a graph resident in server memory;
     our analogue is keeping each (edges-DataFrame, type) adjacency warm
     across calls — the second `find_paths` over the same graph must not
-    re-filter, re-count and re-collect the same edge set. The memo is keyed
-    WEAKLY on the edges DataFrame object: mutations produce new DataFrames
-    (immutable lineage) so a stale hit is impossible, and entries die with
-    their graph. Entry: {"df": compact_df, "n": count, "pdf": pandas or
-    None (collected only for measured-small sets), "derived": {}} — callers
-    stash adjacency/CSR structures in "derived" so each shape is built once.
-
-    Consequence: the big-case cache is NOT unpersisted per call any more —
-    a resident typed-edge cache (bounded by the handful of edge types) is
-    the deliberate trade, matching the resident-graph serving model.
+    re-filter, re-count and re-collect the same edge set. The memo
+    (memo.cached) is keyed on the edges DataFrame object: mutations
+    produce new DataFrames (immutable lineage) so a stale hit is
+    impossible. Entry: {"df": compact_df, "n": count, "pdf": pandas or
+    None (collected only for measured-small sets), "derived": {}} —
+    callers stash adjacency/CSR structures in "derived" so each shape is
+    built once.
     """
-    per = _EDGE_MEMO.setdefault(edges, {})
-    hit = per.get(edge_type)
-    if hit is not None:
-        _memo_touch(edges, edge_type)
-        return hit
-    e = edges if edge_type is None else edges.filter(F.col("type") == edge_type)
-    e, n = _stationary_edges(e.select(F.col("src").alias("_s"), F.col("dst").alias("_d")))
-    entry = {
-        "df": e,
-        "n": n,
-        "pdf": e.toPandas() if n <= _LOCAL_EDGE_ROWS else None,
-        "derived": {},
-    }
-    per[edge_type] = entry
-    _memo_touch(edges, edge_type)
-    return entry
+
+    def build() -> dict:
+        e = edges if edge_type is None else edges.filter(F.col("type") == edge_type)
+        e, n = _stationary_edges(e.select(F.col("src").alias("_s"), F.col("dst").alias("_d")))
+        return {
+            "df": e,
+            "n": n,
+            "pdf": e.toPandas() if n <= _LOCAL_EDGE_ROWS else None,
+            "derived": {},
+        }
+
+    return cached(edges.sparkSession, ("typed_edges", edges, edge_type), build)
 
 
 def _stationary_edges(e: DataFrame) -> tuple[DataFrame, int]:

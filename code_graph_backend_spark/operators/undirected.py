@@ -1,15 +1,13 @@
-"""Session-scoped memo for the undirected-distinct edge table.
+"""Session-memoized edge tables derived from the resident graph.
 
 Deriving the undirected edge list (least/greatest + DISTINCT) is a full
 shuffle over the typed edge list and dominates every graph kernel that
 consumes it (measured: ~4s of graph_mst_boruvka's 6s at sf0.1 was this
-one distinct). The resident graph (graph/tpch.py `_GRAPH_CACHE`) already
+one distinct). The resident graph (graph/tpch.build_graph) already
 memoizes nodes/edges per (session, sf_dir); this extends the same
-discipline one derivation deeper, exactly like the BPE trained-model
-memo (functions/bpe.py `_TRAIN_MEMO`): keyed by the identity of the
-resident edges DataFrame, bounded, and unpersisted on eviction (the
-ADVICE.md r4 lesson — eviction must release the executor blocks, not
-just drop the Python reference).
+discipline one derivation deeper: each table and its numpy twin is
+built once per (session, edges object) through memo.cached, which
+unpersists on eviction.
 """
 
 from __future__ import annotations
@@ -17,48 +15,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# key -> (edges_ref, und); edges_ref pins the source DataFrame so its
-# id() cannot be recycled while the memo entry lives
-_UND_MEMO: dict[tuple[int, int], tuple[DataFrame, DataFrame]] = {}
-_MEMO_CAP = 8
-# array-cache working set is larger: und/dir/ids/ek entries per
-# (session, sf) — ~50 MB each at sf0.1, so 16 entries is still noise
-_ARR_CAP = 16
-
-
-def _evict_oldest(memo: dict):
-    """Drop the OLDEST entry (insertion order). dict.popitem() pops the
-    NEWEST — using it for eviction churns the cache as soon as the
-    working set reaches the cap (measured: the local-path kernels
-    re-collected their arrays on every bench query)."""
-    key = next(iter(memo))
-    val = memo.pop(key)
-    return val
+from ..memo import cached
 
 
 def und_cached(spark: SparkSession, edges: DataFrame) -> DataFrame:
     """Distinct undirected pairs (u < v) of `edges`, persisted once per
     (session, edges-object) and shared by every kernel in the session."""
-    key = (id(spark), id(edges))
-    hit = _UND_MEMO.get(key)
-    if hit is not None:
-        return hit[1]
-    und = (
+    return cached(spark, ("und", edges), lambda: (
         edges.select(
             F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
         .persist()
-    )
-    while len(_UND_MEMO) >= _MEMO_CAP:
-        _, old = _evict_oldest(_UND_MEMO)
-        try:
-            old.unpersist()
-        except Exception:
-            pass
-    _UND_MEMO[key] = (edges, und)
-    return und
+    ))
 
 
 def und_ab(spark: SparkSession, edges: DataFrame) -> DataFrame:
@@ -75,19 +45,9 @@ def und_ab(spark: SparkSession, edges: DataFrame) -> DataFrame:
     return und.select(F.col("u").alias("a"), F.col("v").alias("b"))
 
 
-_DIR_MEMO: dict[tuple[int, int], tuple[DataFrame, DataFrame]] = {}
-
 # Driver-side numpy twins of the cached tables, for the measured-size
 # local kernels (mst/mis/wcc/kcore/scc): one Arrow collect per
 # (session, edges object), then every kernel call is pure array work.
-# Values keep a ref to the source DataFrame so id() cannot be recycled.
-_ARR_MEMO: dict[tuple, tuple] = {}
-
-
-def _arr_memo_put(key, edges_ref, value):
-    while len(_ARR_MEMO) >= _ARR_CAP:
-        _evict_oldest(_ARR_MEMO)
-    _ARR_MEMO[key] = (edges_ref, value)
 
 
 def und_arrays(spark: SparkSession, edges: DataFrame):
@@ -96,20 +56,17 @@ def und_arrays(spark: SparkSession, edges: DataFrame):
     of each endpoint into it. Collected once per (session, edges)."""
     import numpy as np
 
-    key = ("und", id(spark), id(edges))
-    hit = _ARR_MEMO.get(key)
-    if hit is not None:
-        return hit[1]
-    pdf = und_cached(spark, edges).toPandas()
-    a = pdf["u"].to_numpy(np.int64)
-    b = pdf["v"].to_numpy(np.int64)
-    ids = np.unique(np.concatenate([a, b]))
-    out = {
-        "a": a, "b": b, "ids": ids,
-        "ai": np.searchsorted(ids, a), "bi": np.searchsorted(ids, b),
-    }
-    _arr_memo_put(key, edges, out)
-    return out
+    def build():
+        pdf = und_cached(spark, edges).toPandas()
+        a = pdf["u"].to_numpy(np.int64)
+        b = pdf["v"].to_numpy(np.int64)
+        ids = np.unique(np.concatenate([a, b]))
+        return {
+            "a": a, "b": b, "ids": ids,
+            "ai": np.searchsorted(ids, a), "bi": np.searchsorted(ids, b),
+        }
+
+    return cached(spark, ("und_arrays", edges), build)
 
 
 def dir_arrays(spark: SparkSession, edges: DataFrame):
@@ -117,20 +74,17 @@ def dir_arrays(spark: SparkSession, edges: DataFrame):
     the dir_cached twin of und_arrays."""
     import numpy as np
 
-    key = ("dir", id(spark), id(edges))
-    hit = _ARR_MEMO.get(key)
-    if hit is not None:
-        return hit[1]
-    pdf = dir_cached(spark, edges).toPandas()
-    s = pdf["src"].to_numpy(np.int64)
-    d = pdf["dst"].to_numpy(np.int64)
-    ids = np.unique(np.concatenate([s, d]))
-    out = {
-        "s": s, "d": d, "ids": ids,
-        "si": np.searchsorted(ids, s), "di": np.searchsorted(ids, d),
-    }
-    _arr_memo_put(key, edges, out)
-    return out
+    def build():
+        pdf = dir_cached(spark, edges).toPandas()
+        s = pdf["src"].to_numpy(np.int64)
+        d = pdf["dst"].to_numpy(np.int64)
+        ids = np.unique(np.concatenate([s, d]))
+        return {
+            "s": s, "d": d, "ids": ids,
+            "si": np.searchsorted(ids, s), "di": np.searchsorted(ids, d),
+        }
+
+    return cached(spark, ("dir_arrays", edges), build)
 
 
 def ids_array(spark: SparkSession, nodes: DataFrame):
@@ -138,13 +92,9 @@ def ids_array(spark: SparkSession, nodes: DataFrame):
     (session, nodes object)."""
     import numpy as np
 
-    key = ("ids", id(spark), id(nodes))
-    hit = _ARR_MEMO.get(key)
-    if hit is not None:
-        return hit[1]
-    out = np.unique(nodes.select("id").toPandas()["id"].to_numpy(np.int64))
-    _arr_memo_put(key, nodes, out)
-    return out
+    return cached(spark, ("ids_array", nodes), lambda: np.unique(
+        nodes.select("id").toPandas()["id"].to_numpy(np.int64)
+    ))
 
 
 def dir_cached(spark: SparkSession, edges: DataFrame) -> DataFrame:
@@ -152,21 +102,9 @@ def dir_cached(spark: SparkSession, edges: DataFrame) -> DataFrame:
     orientation-preserving sibling of und_cached for kernels whose
     oracle spells out the directed-distinct formulation (k-core degree
     counts, SCC reachability)."""
-    key = (id(spark), id(edges))
-    hit = _DIR_MEMO.get(key)
-    if hit is not None:
-        return hit[1]
-    d = (
+    return cached(spark, ("dir", edges), lambda: (
         edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
         .persist()
-    )
-    while len(_DIR_MEMO) >= _MEMO_CAP:
-        _, old = _evict_oldest(_DIR_MEMO)
-        try:
-            old.unpersist()
-        except Exception:
-            pass
-    _DIR_MEMO[key] = (edges, d)
-    return d
+    ))

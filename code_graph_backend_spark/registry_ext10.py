@@ -14,6 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from .memo import cached
 from .registry import register
 from .session import read_table
 from .functions.sampling import bloom_positions_sql
@@ -323,23 +324,18 @@ def _succession_graph(spark, sf_dir):
     return nodes, edges
 
 
-# Session-scoped walk-corpus memo (the BPE trained-model precedent):
-# graph_random_walks and walk_skipgram_pairs share one materialized walk
-# table per (session, sf_dir) — the 8 checkpointed rounds run once, the
-# skip-gram query only pays its band join. Bounded like _TRAIN_MEMO.
-_WALKS_MEMO: dict = {}
-
-
 def _walks_for(spark, sf_dir):
-    key = (id(spark), sf_dir)
-    if key not in _WALKS_MEMO:
-        from .operators.walks import random_walks
+    """Session-memoized walk corpus: graph_random_walks and
+    walk_skipgram_pairs share one materialized walk table per (session,
+    sf_dir) — the 8 checkpointed rounds run once, the skip-gram query
+    only pays its band join."""
+    from .operators.walks import random_walks
 
+    def build():
         nodes, edges = _succession_graph(spark, sf_dir)
-        _WALKS_MEMO[key] = random_walks(nodes, edges, walk_len=8, seed_mod=7)
-        while len(_WALKS_MEMO) > 4:
-            _WALKS_MEMO.pop(next(iter(_WALKS_MEMO)))
-    return _WALKS_MEMO[key]
+        return random_walks(nodes, edges, walk_len=8, seed_mod=7)
+
+    return cached(spark, ("walks", sf_dir), build)
 
 
 @register(

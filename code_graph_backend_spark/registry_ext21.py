@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from .memo import cached
 from .registry import register
 from .session import read_table
 
@@ -263,13 +264,6 @@ _RA_TOPK = 30
 _RA_WEDGE_CAP = 2_000_000_000
 
 
-# wedge-bound memo: sum(deg^2) is a property of the edge set alone, so
-# the guard job runs once per (substrate object, cap) and every later
-# call (bench samples, repeated API reads) skips straight to the plan.
-# Values pin the DataFrame so id() cannot be recycled while cached.
-_RA_GUARD_MEMO: dict = {}
-
-
 def resource_allocation(cooc, topk: int, wedge_cap: int = _RA_WEDGE_CAP):
     """Exact RA = Σ_z 1/deg(z) over non-adjacent pairs of a SUPPORT-
     PRUNED undirected edge list `cooc` (src, dst). Precondition:
@@ -281,17 +275,12 @@ def resource_allocation(cooc, topk: int, wedge_cap: int = _RA_WEDGE_CAP):
         cooc.select(F.col("dst").alias("a"), F.col("src").alias("b"))
     )
     deg = sym.groupBy("a").agg(F.count("*").cast("long").alias("d"))
-    guard_key = (id(cooc), wedge_cap)
-    hit = _RA_GUARD_MEMO.get(guard_key)
-    if hit is None:
-        deg_sq = deg.agg(
-            F.coalesce(F.sum(F.col("d") * F.col("d")), F.lit(0)).alias("w")
-        ).collect()[0]["w"]
-        while len(_RA_GUARD_MEMO) >= 16:
-            _RA_GUARD_MEMO.pop(next(iter(_RA_GUARD_MEMO)))
-        _RA_GUARD_MEMO[guard_key] = (cooc, deg_sq)
-    else:
-        deg_sq = hit[1]
+    # sum(deg^2) is a property of the edge set alone, so the guard job
+    # runs once per substrate object and every later call (bench
+    # samples, repeated API reads) skips straight to the plan
+    deg_sq = cached(cooc.sparkSession, ("ra_wedges", cooc), lambda: deg.agg(
+        F.coalesce(F.sum(F.col("d") * F.col("d")), F.lit(0)).alias("w")
+    ).collect()[0]["w"])
     if deg_sq > wedge_cap:
         raise ValueError(
             f"resource_allocation: wedge bound sum(deg^2)={deg_sq} exceeds "

@@ -126,39 +126,16 @@ def curation_gate_ablation_q(spark, sf_dir):
     decontamination): how many docs each gate kills, and how many ONLY
     that gate kills — the marginal-value table every filtering paper
     publishes before adding or retiring a gate. The kill sets are the
-    complements of the memoized gate tables (memo.py), so the whole
+    complements of the memoized gate tables (curation.py), so the whole
     report is four doc_id anti-joins + one per-doc count."""
-    from .functions.boilerplate import boilerplate_stats
-    from .functions.dedup import ngram_jaccard_pairs
-    from .functions.sampling import contamination_ngram
-    from .functions.text import token_repetition
-    from .memo import memo_df
-    from .operators.components import dedup_clusters
+    from .curation import curation_boiler, curation_canon, curation_contam, curation_quality
 
     docs = read_table(spark, sf_dir, "documents")
     ids = docs.select("doc_id")
-    from .curation import curation_canon
-
     canon = curation_canon(spark, sf_dir, docs)
-    quality = memo_df(
-        spark, ("curation_quality", sf_dir),
-        lambda: token_repetition(docs)
-        .filter((F.col("n_tokens") >= 30) & (F.col("dup_bigram_ratio") <= 0.05))
-        .select("doc_id"),
-    )
-    boiler_ok = memo_df(
-        spark, ("curation_boiler5", sf_dir),
-        lambda: boilerplate_stats(docs, n=5)
-        .filter(F.col("n_boiler") * 2 <= F.col("n_shingles"))
-        .select("doc_id"),
-    )
-    probes = docs.filter(F.col("doc_id") % 97 == 0).select(
-        F.col("doc_id").alias("probe_id"), F.col("text").alias("probe_text")
-    )
-    contam = memo_df(
-        spark, ("curation_contam", sf_dir),
-        lambda: contamination_ngram(docs, probes).select("doc_id").distinct(),
-    )
+    quality = curation_quality(spark, sf_dir, docs)
+    boiler_ok = curation_boiler(spark, sf_dir, docs)
+    contam = curation_contam(spark, sf_dir, docs)
     kills = (
         ids.join(canon, "doc_id", "left_anti")
         .select("doc_id", F.lit("canonical").alias("gate"))

@@ -48,6 +48,7 @@ import math
 from pyspark.sql import functions as F
 
 from .functions.sketches import _M, _rho_sql
+from .memo import cached
 from .registry import register
 
 _ANF_HOPS = 2
@@ -179,18 +180,16 @@ def _anf_static(spark, g):
     (session, graph) into the shared kernel-array memo — every re-run
     of the query (bench samples, repeated API calls) is then pure
     array work."""
+    # keyed on both DataFrames: the output derives from nodes (seed) and
+    # edges (rcv/snd), so the same nodes paired with other edges misses
+    return cached(spark, ("anf", g.nodes, g.edges), lambda: _anf_arrays(spark, g))
+
+
+def _anf_arrays(spark, g):
     import numpy as np
 
-    from .operators.undirected import _ARR_MEMO, _arr_memo_put, und_arrays
+    from .operators.undirected import und_arrays
 
-    # both DataFrames key the memo AND are pinned in the value: the
-    # output derives from nodes (seed) and edges (rcv/snd), so the same
-    # nodes object paired with different edges must miss, and neither
-    # id() may be recycled while the entry lives
-    key = ("anf", id(spark), id(g.nodes), id(g.edges))
-    hit = _ARR_MEMO.get(key)
-    if hit is not None:
-        return hit[1]
     seed = _seed_df(g).toPandas()
     ids = np.sort(seed["grp"].to_numpy(np.int64))
     n = len(ids)
@@ -221,7 +220,7 @@ def _anf_static(spark, g):
     # ranges that do not split a receiver run write DISJOINT flat slices,
     # so the scatter-max threads need no atomics (functions/native.py)
     r_order = np.argsort(rcv, kind="stable")
-    out = {
+    return {
         "n": n,
         "seed_flat_idx": pos * _M + (seed_pk >> 6).astype(np.int64),
         "seed_pk": seed_pk,
@@ -231,8 +230,6 @@ def _anf_static(spark, g):
         "rcv_r": np.ascontiguousarray(rcv[r_order]),
         "snd_r": np.ascontiguousarray(snd[r_order]),
     }
-    _arr_memo_put(key, (g.nodes, g.edges), out)
-    return out
 
 
 def _anf_threads() -> int:

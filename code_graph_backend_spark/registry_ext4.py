@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .graph.tpch import SQL_EDGES, SQL_NODES
+from .memo import cached
 from .registry import register
 from .session import read_table
 
@@ -220,32 +221,13 @@ def curation_pipeline(spark, sf_dir):
     pipeline stays a single Catalyst plan (no driver materialization
     between stages), which is how it would run over 100 TB: each gate is
     a shuffle-bounded subplan, and the final sample is one window."""
-    from .functions.dedup import ngram_jaccard_pairs
-    from .functions.sampling import contamination_ngram, weighted_sample
-    from .functions.text import token_repetition
-    from .operators.components import dedup_clusters
-
-    from .memo import memo_df
+    from .curation import curation_canon, curation_contam, curation_quality
+    from .functions.sampling import weighted_sample
 
     docs = read_table(spark, sf_dir, "documents")
-    # the three pipeline variants (v1/v2/v3) build these gates with
-    # identical code and literals — memo once per (session, sf_dir)
-    from .curation import curation_canon
-
     canon = curation_canon(spark, sf_dir, docs)
-    quality = memo_df(
-        spark, ("curation_quality", sf_dir),
-        lambda: token_repetition(docs)
-        .filter((F.col("n_tokens") >= 30) & (F.col("dup_bigram_ratio") <= 0.05))
-        .select("doc_id"),
-    )
-    probes = docs.filter(F.col("doc_id") % 97 == 0).select(
-        F.col("doc_id").alias("probe_id"), F.col("text").alias("probe_text")
-    )
-    contam = memo_df(
-        spark, ("curation_contam", sf_dir),
-        lambda: contamination_ngram(docs, probes).select("doc_id").distinct(),
-    )
+    quality = curation_quality(spark, sf_dir, docs)
+    contam = curation_contam(spark, sf_dir, docs)
     surv = (
         docs.select("doc_id", "source")
         .join(canon, "doc_id")
@@ -400,13 +382,6 @@ def mm_frame_features(spark, sf_dir):
     return multimodal.extract_frames(media, every_n=30, fake=True)
 
 
-# One persisted IVF index per (session, sf_dir) — index construction is
-# ingest cost (the analyze_repo analogue), queries measure probe latency
-# against the standing index. Same policy as the resident graph cache
-# (graph/tpch.py _GRAPH_CACHE).
-_IVF_CACHE: dict[tuple[int, str], tuple[str, object]] = {}
-
-
 @register(
     "cypher_frontend_hop",
     f"""
@@ -496,14 +471,22 @@ def ann_ivf_indexed_topk(spark, sf_dir):
     partitions (dynamic partition pruning), so query I/O is the probed
     fraction of the corpus, not a full scan. Approximate by design →
     rows-only driver check; recall pinned in pytest
-    (tests/test_dedup_similarity.py)."""
+    (tests/test_dedup_similarity.py). The index is built once per
+    (session, sf_dir) — index construction is ingest cost (the
+    analyze_repo analogue), queries measure probe latency against the
+    standing index."""
+    import hashlib
+
     from .functions import similarity
 
     emb = read_table(spark, sf_dir, "embeddings")
-    key = (id(spark), sf_dir.rstrip("/"))
-    if key not in _IVF_CACHE:
-        _IVF_CACHE[key] = similarity.build_ivf_index(emb, "ivf_bench_idx")
-    name, cent = _IVF_CACHE[key]
+    sf = sf_dir.rstrip("/")
+    # one table per scale directory: a shared name would let the next
+    # directory's build overwrite the index an earlier entry still names
+    table = "ivf_idx_" + hashlib.sha1(sf.encode()).hexdigest()[:16]
+    name, cent = cached(
+        spark, ("ivf_index", sf), lambda: similarity.build_ivf_index(emb, table)
+    )
     return similarity.ivf_topk_indexed(
         spark, emb.filter(F.col("vec_id") < 5), name, cent, k=10
     )

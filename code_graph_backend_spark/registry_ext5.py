@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .functions import dedup, similarity
+from .memo import cached
 from .registry import register
 from .session import read_table
 
@@ -254,9 +255,6 @@ def emb_label_centroids_q(spark, sf_dir):
     return label_centroids(read_table(spark, sf_dir, "embeddings"))
 
 
-_COOC_MEMO: dict[tuple[int, str], object] = {}
-
-
 def _cooc_edges(spark, sf_dir):
     """Frequent part-co-occurrence edges: parts sharing an order in ≥2
     DISTINCT orders (the market-basket support prune). Without the
@@ -268,37 +266,25 @@ def _cooc_edges(spark, sf_dir):
 
     Session-memoized per (session, sf_dir): six operators consume this
     substrate (triangles/jaccard/ktruss/embeddedness/stress/motifs) and
-    each was paying the lineitem distinct + self-join again — the same
-    resident-cache discipline as graph/tpch._GRAPH_CACHE and
-    operators/undirected.und_cached. The result is ~3.5k rows, so the
-    persisted footprint is noise."""
-    key = (id(spark), sf_dir.rstrip("/"))
-    hit = _COOC_MEMO.get(key)
-    if hit is not None:
-        return hit
-    li = read_table(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
-    ).distinct()
-    a, b = li.alias("a"), li.alias("b")
-    out = (
-        a.join(b, "ok")
-        .filter(F.col("a.pk") < F.col("b.pk"))
-        .groupBy(F.col("a.pk").alias("src"), F.col("b.pk").alias("dst"))
-        .agg(F.count("*").alias("sup"))
-        .filter(F.col("sup") >= 2)
-        .select("src", "dst")
-        .persist()
-    )
-    while len(_COOC_MEMO) >= 4:
-        # oldest-first eviction (popitem pops the newest)
-        old = _COOC_MEMO.pop(next(iter(_COOC_MEMO)))
-        try:
-            old.unpersist()
-        except Exception:
-            pass
-    _COOC_MEMO[key] = out
-    return out
+    each was paying the lineitem distinct + self-join again. The result
+    is ~3.5k rows, so the persisted footprint is noise."""
 
+    def build():
+        li = read_table(spark, sf_dir, "lineitem").select(
+            F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
+        ).distinct()
+        a, b = li.alias("a"), li.alias("b")
+        return (
+            a.join(b, "ok")
+            .filter(F.col("a.pk") < F.col("b.pk"))
+            .groupBy(F.col("a.pk").alias("src"), F.col("b.pk").alias("dst"))
+            .agg(F.count("*").alias("sup"))
+            .filter(F.col("sup") >= 2)
+            .select("src", "dst")
+            .persist()
+        )
+
+    return cached(spark, ("cooc", sf_dir.rstrip("/")), build)
 
 
 @register(
@@ -437,26 +423,21 @@ def graph_label_propagation_q(spark, sf_dir):
     return lpa_labels(spark, sf_dir)
 
 
-# Session-scoped LPA-labels memo (the walk-corpus/BPE precedent):
-# graph_label_propagation and graph_modularity share one checkpointed
-# label table per (session, sf_dir) — the 2 propagation rounds run once;
-# modularity only pays its edge joins. Safe to cache: the final labels
-# are localCheckpoint-backed (operators/labelprop.py), not lineage-tied
-# to scratch persists.
-_LPA_MEMO: dict = {}
-
-
 def lpa_labels(spark, sf_dir):
-    key = (id(spark), sf_dir.rstrip("/"))
-    if key not in _LPA_MEMO:
-        from .graph.tpch import build_graph
-        from .operators.labelprop import label_propagation
+    """Session-memoized LPA labels: graph_label_propagation and
+    graph_modularity share one checkpointed label table per (session,
+    sf_dir) — the 2 propagation rounds run once; modularity only pays
+    its edge joins. Safe to cache: the final labels are
+    localCheckpoint-backed (operators/labelprop.py), not lineage-tied to
+    scratch persists."""
+    from .graph.tpch import build_graph
+    from .operators.labelprop import label_propagation
 
+    def build():
         g = build_graph(spark, sf_dir)
-        _LPA_MEMO[key] = label_propagation(spark, g.nodes, g.edges, iters=2)
-        while len(_LPA_MEMO) > 4:
-            _LPA_MEMO.pop(next(iter(_LPA_MEMO)))
-    return _LPA_MEMO[key]
+        return label_propagation(spark, g.nodes, g.edges, iters=2)
+
+    return cached(spark, ("lpa", sf_dir.rstrip("/")), build)
 
 
 @register(

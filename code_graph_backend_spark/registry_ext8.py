@@ -166,55 +166,16 @@ def curation_pipeline_v2_q(spark, sf_dir):
     13-gram table on both engines, so the whole chain shares one gram
     explode per n. Final output: the docs inside the 15k-token greedy
     budget, with their running total."""
-    from .functions.boilerplate import boilerplate_stats, duplicated_spans
-    from .functions.dedup import ngram_jaccard_pairs
-    from .functions.sampling import contamination_ngram
-    from .functions.text import token_count, token_repetition
-    from .operators.components import dedup_clusters
-
-    from .memo import memo_df
+    from .curation import (curation_boiler, curation_canon, curation_contam,
+                           curation_ntok, curation_quality, curation_span)
 
     docs = read_table(spark, sf_dir, "documents")
-    # gates shared verbatim with v1/v3 — one memo key per (gate, sf_dir)
-    from .curation import curation_canon
-
     canon = curation_canon(spark, sf_dir, docs)
-    quality = memo_df(
-        spark, ("curation_quality", sf_dir),
-        lambda: token_repetition(docs)
-        .filter((F.col("n_tokens") >= 30) & (F.col("dup_bigram_ratio") <= 0.05))
-        .select("doc_id"),
-    )
-    boiler_ok = memo_df(
-        spark, ("curation_boiler5", sf_dir),
-        lambda: boilerplate_stats(docs, n=5)
-        .filter(F.col("n_boiler") * 2 <= F.col("n_shingles"))
-        .select("doc_id"),
-    )
-    ntok = memo_df(
-        spark, ("curation_ntok", sf_dir),
-        lambda: docs.select(
-            "doc_id", token_count("text").cast("long").alias("n_tokens")
-        ),
-    )
-    span_ok = memo_df(
-        spark, ("curation_span13", sf_dir),
-        lambda: ntok.join(
-            duplicated_spans(docs, n=13)
-            .groupBy("doc_id")
-            .agg(F.sum("span_tokens").alias("covered")),
-            "doc_id", "left",
-        )
-        .filter(F.coalesce("covered", F.lit(0)) * 2 <= F.col("n_tokens"))
-        .select("doc_id"),
-    )
-    probes = docs.filter(F.col("doc_id") % 97 == 0).select(
-        F.col("doc_id").alias("probe_id"), F.col("text").alias("probe_text")
-    )
-    contam = memo_df(
-        spark, ("curation_contam", sf_dir),
-        lambda: contamination_ngram(docs, probes).select("doc_id").distinct(),
-    )
+    quality = curation_quality(spark, sf_dir, docs)
+    boiler_ok = curation_boiler(spark, sf_dir, docs)
+    ntok = curation_ntok(spark, sf_dir, docs)
+    span_ok = curation_span(spark, sf_dir, docs)
+    contam = curation_contam(spark, sf_dir, docs)
     surv = (
         docs.select("doc_id", "n_chars")
         .join(canon, "doc_id")

@@ -458,59 +458,21 @@ def curation_pipeline_v3_q(spark, sf_dir):
     hash-exactly. Ordered output like token_budget_select."""
     from pyspark.sql.window import Window
 
-    from .functions.boilerplate import boilerplate_stats, duplicated_spans
-    from .functions.dedup import ngram_jaccard_pairs
-    from .functions.sampling import contamination_ngram
-    from .functions.text import gopher_quality_gates, token_count, token_repetition
-    from .operators.components import dedup_clusters
-
-    from .memo import memo_df
+    from .curation import (curation_boiler, curation_canon, curation_contam,
+                           curation_ntok, curation_quality, curation_span)
+    from .functions.text import gopher_quality_gates
 
     docs = read_table(spark, sf_dir, "documents")
-    # the six v1/v2 gates come from the shared memo (identical literals
-    # across the pipeline variants); only the two v3-specific gates
-    # (gopher, bigram-LM) are built here
-    from .curation import curation_canon
-
+    # the six v1/v2 gates are the shared ones (curation.py); only the two
+    # v3-specific gates (gopher, bigram-LM) are built here
     canon = curation_canon(spark, sf_dir, docs)
-    quality = memo_df(
-        spark, ("curation_quality", sf_dir),
-        lambda: token_repetition(docs)
-        .filter((F.col("n_tokens") >= 30) & (F.col("dup_bigram_ratio") <= 0.05))
-        .select("doc_id"),
-    )
+    quality = curation_quality(spark, sf_dir, docs)
     gopher_ok = gopher_quality_gates(docs).filter(F.col("passes")).select("doc_id")
     lm_ok = bigram_nll(docs).filter(F.col("avg_nll_bits") <= 4.9).select("doc_id")
-    boiler_ok = memo_df(
-        spark, ("curation_boiler5", sf_dir),
-        lambda: boilerplate_stats(docs, n=5)
-        .filter(F.col("n_boiler") * 2 <= F.col("n_shingles"))
-        .select("doc_id"),
-    )
-    ntok = memo_df(
-        spark, ("curation_ntok", sf_dir),
-        lambda: docs.select(
-            "doc_id", token_count("text").cast("long").alias("n_tokens")
-        ),
-    )
-    span_ok = memo_df(
-        spark, ("curation_span13", sf_dir),
-        lambda: ntok.join(
-            duplicated_spans(docs, n=13)
-            .groupBy("doc_id")
-            .agg(F.sum("span_tokens").alias("covered")),
-            "doc_id", "left",
-        )
-        .filter(F.coalesce("covered", F.lit(0)) * 2 <= F.col("n_tokens"))
-        .select("doc_id"),
-    )
-    probes = docs.filter(F.col("doc_id") % 97 == 0).select(
-        F.col("doc_id").alias("probe_id"), F.col("text").alias("probe_text")
-    )
-    contam = memo_df(
-        spark, ("curation_contam", sf_dir),
-        lambda: contamination_ngram(docs, probes).select("doc_id").distinct(),
-    )
+    boiler_ok = curation_boiler(spark, sf_dir, docs)
+    ntok = curation_ntok(spark, sf_dir, docs)
+    span_ok = curation_span(spark, sf_dir, docs)
+    contam = curation_contam(spark, sf_dir, docs)
     surv = (
         docs.select("doc_id", "n_chars")
         .join(canon, "doc_id")

@@ -12,6 +12,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from .memo import cached
+
 
 def _limit_blas_threads() -> None:
     """Pin BLAS to one thread per process — the canonical Spark setting.
@@ -134,22 +136,6 @@ def get_spark(
     return builder.getOrCreate()
 
 
-# Resident table handles: one DataFrame object per (session, sf_dir,
-# name). The engine's memo layers (typed-edge memo, kernel-array cache,
-# trained-model memos) key on the IDENTITY of their input DataFrame —
-# the resident-graph discipline — but read_table used to mint a fresh
-# object per call, so any memo keyed on a raw table (the PQ/IVF
-# codebooks, notably) could never hit across calls and re-trained per
-# invocation (measured: ~5 s of ann_pq_topk's per-call latency at sf0.1
-# was codebook re-training + re-sampling). DataFrames are immutable, so
-# handing every caller the same object is semantics-free; nothing is
-# persisted here — the entry is a plan, not data. The value keeps the
-# DataFrame (which pins its SparkSession), so id() keys cannot recycle
-# while an entry lives.
-_TABLE_MEMO: dict[tuple[int, str, str], object] = {}
-_TABLE_MEMO_CAP = 64
-
-
 def read_table(spark: SparkSession, sf_dir: str, name: str):
     """Read one driver-provided parquet table (TESTDATA.md).
 
@@ -161,11 +147,16 @@ def read_table(spark: SparkSession, sf_dir: str, name: str):
     session factory. With nanosAsLong the column arrives as long;
     normalize to a microsecond timestamp (floor), which is what DuckDB's
     TIMESTAMP cast yields too.
+
+    Every caller gets the same DataFrame object per (session, sf_dir,
+    name): the engine's memos key on the identity of their input
+    DataFrame, so a fresh object per call would make every memo keyed on
+    a raw table miss. Nothing is persisted; the entry is a plan.
     """
-    key = (id(spark), sf_dir, name)
-    hit = _TABLE_MEMO.get(key)
-    if hit is not None:
-        return hit
+    return cached(spark, ("table", sf_dir, name), lambda: _read(spark, sf_dir, name))
+
+
+def _read(spark: SparkSession, sf_dir: str, name: str):
     path = os.path.join(sf_dir, f"{name}.parquet")
     try:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -178,9 +169,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str):
         from pyspark.sql import functions as F
 
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    while len(_TABLE_MEMO) >= _TABLE_MEMO_CAP:
-        _TABLE_MEMO.pop(next(iter(_TABLE_MEMO)))  # oldest-first
-    _TABLE_MEMO[key] = df
     return df
 
 

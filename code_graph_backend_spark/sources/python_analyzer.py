@@ -45,7 +45,7 @@ _REEXPORT_HOPS = 5
 
 PARSE_SCHEMA = StructType(
     [
-        StructField("kind", StringType(), False),  # entity|call|extends|returns|params|import
+        StructField("kind", StringType(), False),  # file|entity|call|extends|returns|params|import
         StructField("label", StringType(), True),  # entity: Class|Function
         StructField("name", StringType(), True),
         StructField("path", StringType(), False),
@@ -224,7 +224,8 @@ def parse_files(files: DataFrame) -> DataFrame:
     Dispatches per file extension like the reference's analyzer registry
     (api/analyzers/source_analyzer.py:24-29): .py → ast, .java/.cs/.c → the
     brace-aware C-family kernels (C is DISABLED in the reference's
-    registry, source_analyzer.py:25 — enabled for real here). Unknown extensions parse to nothing.
+    registry, source_analyzer.py:25 — enabled for real here). Unknown extensions parse to nothing;
+    every handled file also yields one `kind="file"` row (its File node).
     """
     from .cfamily_analyzer import (
         parse_c_source,
@@ -251,6 +252,9 @@ def parse_files(files: DataFrame) -> DataFrame:
                 source = content.decode("utf-8", errors="replace") if isinstance(
                     content, (bytes, bytearray)
                 ) else str(content)
+                # one "file" row per handled file, so a file that defines
+                # nothing still gets its File node
+                out.append(("file", None, None, r["path"]) + (None,) * 8)
                 out.extend(parser(r["path"], source))
             yield pd.DataFrame(out, columns=cols)
 

@@ -248,6 +248,37 @@ def test_two_level_prefix_max_carry_in(spark):
     assert [r["m"] for r in got.collect()] == [100, 100, 100, 999, 999, 999]
 
 
+def test_two_level_prefix_null_bucket_is_kept_and_first(spark):
+    """A nullable bucket: NULL-bucket rows survive the offsets join and
+    sit first in the global order, as a flat ascending window puts them
+    — for both the running sum and the running max."""
+    from pyspark.sql.window import Window
+
+    from code_graph_backend_spark.functions.packing import (
+        two_level_prefix_max,
+        two_level_prefix_sum,
+    )
+
+    d = spark.createDataFrame(
+        [(i, None if i % 5 == 0 else i % 23, (i * 7) % 11 + 1) for i in range(60)],
+        "id long, s long, v long",
+    ).withColumn("b", F.expr("s DIV 8"))
+    order = [F.col("s").asc_nulls_first(), F.col("id").asc()]
+    flat_w = Window.orderBy(*order).rowsBetween(Window.unboundedPreceding, 0)
+    flat = d.select(
+        "id",
+        F.sum("v").over(flat_w).cast("long").alias("c"),
+        F.max("v").over(flat_w).cast("long").alias("m"),
+    )
+    got_c = two_level_prefix_sum(d, "v", "b", order, out_col="c").select("id", "c")
+    got_m = two_level_prefix_max(d, "v", "b", order, out_col="m").select("id", "m")
+    assert got_c.count() == got_m.count() == 60
+    want_c = sorted((r["id"], r["c"]) for r in flat.collect())
+    want_m = sorted((r["id"], r["m"]) for r in flat.collect())
+    assert sorted(map(tuple, got_c.collect())) == want_c
+    assert sorted(map(tuple, got_m.collect())) == want_m
+
+
 def test_exact_ntile_matches_flat_ntile_including_remainders(spark):
     """The closed-form NTILE law at n % t != 0 (larger groups first),
     with ties broken by the tie column, for ascending AND descending

@@ -202,6 +202,17 @@ def test_ivf_indexed_matches_inflight_ivf(emb, spark):
     assert "dynamicpruning" in plan.lower(), plan[:2000]
 
 
+def test_ivf_indexed_query_keeps_its_index_per_scale_dir(spark):
+    """ann_ivf_indexed_topk over sf A, then B, then A in one session: the
+    third call probes A's index, not the index B's build wrote."""
+    import __spark_entry__ as entry
+
+    q = entry.queries()["ann_ivf_indexed_topk"]
+    first = sorted(map(tuple, q(spark, SF_DIR).collect()))
+    q(spark, "/root/testdata/sf0.01").collect()
+    assert sorted(map(tuple, q(spark, SF_DIR).collect())) == first
+
+
 def test_minhash_exact_twin_recall(docs):
     """The md5-family exact twin (driver-oracled, functions/dedup.py
     minhash_lsh_candidates_exact) must behave like a real minhash LSH:

@@ -95,24 +95,6 @@ def test_subgraph_broadcasts_are_request_sized(spark, qs):
                 or "Join" in subtree), subtree[:600]
 
 
-def test_typed_edge_memo_is_bounded(spark):
-    """Resident typed-edge cache stays under its LRU cap and eviction
-    actually drops materialized state (verdict r2 item 4)."""
-    from code_graph_backend_spark.operators import traversal as tr
-
-    base = spark.range(0, 100).selectExpr(
-        "id as src", "id + 1 as dst", "'T' as type",
-        "cast(null as map<string,string>) as props")
-    dfs = [base.withColumn("tag", __import__("pyspark.sql.functions", fromlist=["lit"]).lit(i))
-           for i in range(tr._EDGE_MEMO_CAP + 8)]
-    for df in dfs:
-        tr._typed_edges(df, "T")
-    assert tr._memo_entry_count() <= tr._EDGE_MEMO_CAP
-    # oldest entries were evicted and their state dropped
-    per_first = tr._EDGE_MEMO.get(dfs[0])
-    assert per_first is None or "T" not in per_first
-
-
 def test_pii_redact_is_jvm_map_only(spark, qs):
     """PII redaction: zero shuffles, zero Python workers — pure
     whole-stage-codegen regexp over the scan."""

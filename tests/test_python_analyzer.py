@@ -564,3 +564,19 @@ def test_instantiation_classmethod_comprehension_resolution(spark):
         ("C", "m.py"), ("make", "m.py"), ("f", "m.py"),
         ("go", "m.py"), ("range", ""),
     }
+
+
+def test_file_that_defines_nothing_gets_a_file_node(spark):
+    """Every parsed file gets one File node (reference api/graph.py:392-406),
+    also an empty package `__init__.py` that yields no entity or call rows."""
+    nodes, edges = _build(spark, {
+        "pkg/__init__.py": "",
+        "pkg/mod.py": "def f():\n    return 1\n",
+    })
+    files = {
+        (r["name"], r["path"])
+        for r in nodes.filter(F.array_contains("labels", "File")).collect()
+    }
+    assert files == {("__init__.py", "pkg/__init__.py"), ("mod.py", "pkg/mod.py")}
+    # the empty file contributes its node and nothing else
+    assert nodes.filter(F.col("path") == "pkg/__init__.py").count() == 1
