@@ -16,8 +16,9 @@ shared curation gates. All of it goes through `cached`.
   the entry a caller just received is the last one evicted.
 - Eviction unpersists every DataFrame the entry persisted: the value
   itself, a member of a tuple, list or dict, or a PropertyGraph's nodes
-  and edges. A caller that still holds an evicted DataFrame recomputes
-  it from its lineage, with the same rows.
+  and edges, unless a live entry holds a DataFrame of the same plan. A
+  caller that still holds an evicted DataFrame recomputes it from its
+  lineage, with the same rows.
 """
 
 from __future__ import annotations
@@ -31,10 +32,10 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .graph.model import PropertyGraph
 
-# Entry cap. One oracle pass over all 234 registry queries in one session
-# at sf0.01 peaks at 40 live entries (memo.stats()["peak"]); the cap
-# holds that working set for two scale directories with room to spare
-# for a served repository's per-request typed edge sets.
+# Entry cap. Measured peaks of live entries (memo.stats()["peak"]), one
+# session each: 40 for an oracle pass over all 234 registry queries at
+# sf0.01, 15 for a perfbench olap run, 6 for a perfbench serve_read run
+# (three served repositories). The cap is about three times the largest.
 _CAP = 128
 
 _CACHE: OrderedDict = OrderedDict()
@@ -61,21 +62,40 @@ def cached(spark: SparkSession, key: tuple, build: Callable[[], Any]) -> Any:
     return value
 
 
-def _release(value: Any) -> None:
+def _frames(value: Any):
+    """The DataFrames an entry holds: the value itself, members of a
+    tuple, list or dict, or a PropertyGraph's nodes and edges."""
     if isinstance(value, DataFrame):
-        if value.is_cached:  # persisted through this object, not a plan twin
-            try:
-                value.unpersist()
-            except Py4JError:  # a stopped session's blocks are gone already
-                pass
+        yield value
     elif isinstance(value, (tuple, list)):
         for v in value:
-            _release(v)
+            yield from _frames(v)
     elif isinstance(value, dict):
         for v in value.values():
-            _release(v)
+            yield from _frames(v)
     elif isinstance(value, PropertyGraph):
-        _release((value.nodes, value.edges))
+        yield from (value.nodes, value.edges)
+
+
+def _release(value: Any) -> None:
+    """Unpersist what an evicted entry persisted.
+
+    `unpersist()` uncaches by plan: it drops the cached data of every
+    DataFrame with the same plan, not only of the one it is called on. So
+    a DataFrame is skipped when a live entry holds one with the same plan
+    (a table rebuilt over a newer handle of the same source); that entry's
+    data stays cached. `is_cached` is set only on the object `persist()`
+    was called on, so DataFrames the builder did not persist are skipped."""
+    gone = [d for d in _frames(value) if d.is_cached]
+    if not gone:
+        return
+    live = [d for v in _CACHE.values() for d in _frames(v) if d.is_cached]
+    for d in gone:
+        try:
+            if not any(d.sameSemantics(o) for o in live):
+                d.unpersist()
+        except Py4JError:  # a stopped session's blocks are gone already
+            pass
 
 
 def stats() -> dict:

@@ -18,6 +18,7 @@ from pyspark.sql import Row, SparkSession
 from pyspark.sql import functions as F
 
 from ..graph.model import PropertyGraph
+from ..memo import cached
 from ..operators import lookups, neighbors, search, traversal
 from ..operators.aggregates import counts
 
@@ -88,6 +89,28 @@ class CodeGraphService:
         self.root = root
         self._info = RepoInfoStore(spark, root)  # persistent side-store
 
+    def _graph(self, name: str) -> PropertyGraph:
+        """The stored graph `name` as one handle per stored version.
+
+        Reads share the handle, so state keyed on its DataFrames (the
+        typed edge sets of `traversal._typed_edges`) is built once per
+        version, not once per request. The version is the (inode, mtime)
+        of the nodes and edges directories: `save()` writes each to a new
+        directory and renames it into place, so a rewrite always changes
+        it. Write paths load their own graph, since `save()` re-points the
+        graph it is called on. A graph that is not stored falls through to
+        `load`, which raises as before."""
+        d = os.path.join(self.root, name)
+        try:
+            version = tuple(
+                (s.st_ino, s.st_mtime_ns)
+                for s in (os.stat(os.path.join(d, p)) for p in ("nodes", "edges"))
+            )
+        except OSError:
+            return PropertyGraph.load(self.spark, self.root, name)
+        return cached(self.spark, ("stored_graph", self.root, name, version),
+                      lambda: PropertyGraph.load(self.spark, self.root, name))
+
     # -- read endpoints ---------------------------------------------------
 
     def list_repos(self) -> list[str]:
@@ -96,7 +119,7 @@ class CodeGraphService:
 
     def repo_info(self, repo: str) -> dict:
         """POST /repo_info (reference api/index.py:205-248, A1+A2+side-store)."""
-        g = PropertyGraph.load(self.spark, self.root, repo)
+        g = self._graph(repo)
         row = counts(g.nodes, g.edges).collect()[0]
         info = self._info.get(repo)
         return {
@@ -108,7 +131,7 @@ class CodeGraphService:
 
     def graph_entities(self, repo: str, limit: int = 500) -> dict:
         """POST /graph_entities (reference api/index.py:53-94, J4+O3)."""
-        g = PropertyGraph.load(self.spark, self.root, repo)
+        g = self._graph(repo)
         rows = neighbors.sub_graph(g.nodes, g.edges, limit).collect()
         nodes, edges = {}, []
         for r in rows:
@@ -121,7 +144,7 @@ class CodeGraphService:
     def get_neighbors(self, repo: str, node_ids: list[int],
                       edge_type: str | None = None, label: str | None = None) -> list[dict]:
         """POST /get_neighbors (reference api/index.py:97-144, J1)."""
-        g = PropertyGraph.load(self.spark, self.root, repo)
+        g = self._graph(repo)
         rows = neighbors.out_neighbors(
             self.spark, g.nodes, g.edges, node_ids, edge_type, label
         ).collect()
@@ -129,7 +152,7 @@ class CodeGraphService:
 
     def auto_complete(self, repo: str, prefix: str) -> list[dict]:
         """POST /auto_complete (reference api/index.py:146-182, X3)."""
-        g = PropertyGraph.load(self.spark, self.root, repo)
+        g = self._graph(repo)
         return [_encode_node(r) for r in search.auto_complete(g.nodes, prefix).collect()]
 
     def find_paths(self, repo: str, src: int, dest: int, max_depth: int = 12) -> list[list]:
@@ -139,7 +162,7 @@ class CodeGraphService:
         (reference api/graph.py:577-591); invariant: odd length, endpoints
         match src/dest (tests/endpoints/test_find_paths.py:76-80).
         """
-        g = PropertyGraph.load(self.spark, self.root, repo)
+        g = self._graph(repo)
         paths = traversal.find_paths(
             self.spark, g.edges, src, dest, edge_type="CALLS", max_depth=max_depth
         ).collect()
@@ -165,7 +188,7 @@ class CodeGraphService:
 
     def list_commits(self, repo: str) -> list[dict]:
         """POST /list_commits (reference api/index.py:453-489, O1)."""
-        g = PropertyGraph.load(self.spark, self.root, f"{repo}_git")
+        g = self._graph(f"{repo}_git")
         rows = (
             g.nodes.filter(F.array_contains("labels", "Commit"))
             .orderBy(F.col("props").getItem("date").cast("long"))
@@ -192,7 +215,7 @@ class CodeGraphService:
         if stripped.upper().startswith(("MATCH", "OPTIONAL MATCH")):
             from ..cypher import CypherError
 
-            g = PropertyGraph.load(self.spark, self.root, repo)
+            g = self._graph(repo)
             try:
                 rows = [r.asDict(recursive=True) for r in
                         g.cypher(stripped).limit(500).collect()]
@@ -208,7 +231,7 @@ class CodeGraphService:
         plan = compile_question(question)
         if plan is None:
             return {"answer": None, "query": None, "error": "could not compile question"}
-        g = PropertyGraph.load(self.spark, self.root, repo)
+        g = self._graph(repo)
         i, a = plan.intent, plan.args
 
         if i == "count_label":
@@ -218,7 +241,7 @@ class CodeGraphService:
         elif i == "count_edges":
             ans = g.edges.count()
         elif i == "count_commits":
-            gg = PropertyGraph.load(self.spark, self.root, f"{repo}_git")
+            gg = self._graph(f"{repo}_git")
             ans = gg.nodes.filter(F.array_contains("labels", "Commit")).count()
         elif i == "unreachable":
             rows = neighbors.unreachable(
@@ -454,10 +477,10 @@ class CodeGraphService:
             if current is None:
                 raise ValueError(f"no recorded commit for {repo!r}")
             if current == target_commit:
-                g = PropertyGraph.load(self.spark, self.root, repo)
+                g = self._graph(repo)
                 n, e = g.counts()
                 return {"repo": repo, "commit": current, "nodes": n, "edges": e}
-            gg = PropertyGraph.load(self.spark, self.root, f"{repo}_git")
+            gg = self._graph(f"{repo}_git")
             # X4 read path (reference git_graph.py:69-85 get_commit): point
             # probe through the hash-range layout — the pushed equality
             # prunes to one parquet file, so validation cost is O(1) in

@@ -21,9 +21,8 @@ def small_cache(monkeypatch):
     memo._CACHE.clear()
     monkeypatch.setattr(memo, "_CAP", 3)
     yield
-    for value in memo._CACHE.values():
-        memo._release(value)
-    memo._CACHE.clear()
+    while memo._CACHE:
+        memo._release(memo._CACHE.popitem()[1])
     memo._CACHE.update(saved)
 
 
@@ -78,6 +77,21 @@ def test_eviction_unpersists(spark, small_cache):
         memo.cached(spark, ("t", "filler", i), lambda: None)
     for d in held:
         assert not d.storageLevel.useMemory
+
+
+def test_eviction_keeps_a_live_plan_twin_cached(spark, small_cache):
+    # unpersist() uncaches by plan, so evicting `old` must not unpersist
+    # the data `new` (same plan, still live) reads from
+    old = memo.cached(spark, ("t", "old"), lambda: spark.range(15).persist())
+    new = memo.cached(spark, ("t", "new"), lambda: spark.range(15).persist())
+    assert old is not new and old.sameSemantics(new)
+    new.count()
+    for i in range(2):  # the second evicts `old`
+        memo.cached(spark, ("t", "filler", i), lambda: None)
+    assert memo.stats()["entries"] == 3
+    assert new.storageLevel.useMemory
+    memo.cached(spark, ("t", "filler", 2), lambda: None)  # evicts `new`
+    assert not new.storageLevel.useMemory
 
 
 def test_new_session_or_sf_dir_misses(spark):

@@ -124,6 +124,28 @@ def test_switch_commit_forward_and_back(svc, spark):
     assert svc.repo_info("fixture")["commit"] == "c0"
 
 
+def test_reads_share_one_graph_handle_per_stored_version(svc, tmp_path):
+    from code_graph_backend_spark import memo
+
+    v1, v2 = tmp_path / "v1", tmp_path / "v2"
+    for d, extra in ((v1, ""), (v2, "\ndef h():\n    return f()\n")):
+        d.mkdir()
+        (d / "solo.py").write_text("def f():\n    return g()\n\ndef g():\n    return 1\n" + extra)
+    svc.analyze_folder(str(v1), "versioned")
+    first = svc._graph("versioned")
+    assert svc._graph("versioned") is first
+    ids = {r["name"]: r["id"] for r in first.nodes.collect()}
+    misses = memo.stats()["misses"]
+    for _ in range(2):  # the second request reuses the first's typed edge set
+        assert len(svc.find_paths("versioned", ids["f"], ids["g"])) == 1
+    assert memo.stats()["misses"] == misses + 1
+    svc.analyze_folder(str(v2), "versioned")  # a rewrite is a new version
+    second = svc._graph("versioned")
+    assert second is not first
+    assert "h" in {r["name"] for r in second.nodes.collect()}
+    svc.delete_repo("versioned")
+
+
 def test_delete_repo(svc, spark, tmp_path):
     (tmp_path / "solo.py").write_text("def f():\n    return 1\n")
     svc.analyze_folder(str(tmp_path), "doomed")
