@@ -59,47 +59,10 @@ def entry(spark: SparkSession) -> DataFrame:
     return registry.QUERIES["curation_pipeline_v3"](spark, "/root/testdata/sf0.001")
 
 
-# Grading-order rotation (the driver caps correctness rows per round;
-# observed cap = 50, read mechanically by tools/staleness.py
-# .observed_driver_cap()). GENERATED verbatim from
-# `python tools/staleness.py --emit-priority`: the emitter orders the
-# cleared/fresh remainder OLDEST GREEN FIRST, so positions
-# cap..cap+SPILL are automatically the rows whose evidence expires
-# next round. Gate: tests/test_rotation_staleness.py. This regen
-# restores the gate after the r11 grading files landed (ea9947d):
-# committing CORRECTNESS_r11.json shifts the debt computation, so the
-# rotation must be re-emitted in the same tree (ADVICE r11 item 4 —
-# the r11 rows cleared 50 queries and the natural r7-expiry block
-# (34 rows) now heads the budget, followed by dep-impact debt. If this
-# round's kernel edits move debt, re-emit AFTER the edits (the
-# thrice-learned ordering) before the close. The registry stays FROZEN
-# at 234: it is AT evidence-budget capacity (234 / 5-round re-grade
-# cycle ≈ 47 expiring rows/round vs the 50-row cap — VERDICT r9
-# item 2; the invariant observed_driver_cap()*STALE_ROUNDS >=
-# registry_size is asserted mechanically in the gate suite).
+# Emitted by `tools/staleness.py --emit-priority` after CORRECTNESS_r12.json.
 _PRIORITY = [
     # expired, oldest green first (34)
-    "j3_callees", "j8_chain_payloads", "p5_null_predicate",
-    "p6_dynamic_filters", "f2_f5_size_contains", "f3_path_functions",
-    "x3_auto_complete", "dq_k_anonymity", "events_window_funnel",
-    "events_slo_burn", "curation_gate_ablation", "dedup_cluster_sizes",
-    "supply_risk_single_source", "shard_hash_ring",
-    "events_bot_regularity", "events_latency_percentiles",
-    "emb_silhouette_proxy", "graph_rich_club", "corpus_ks_lengths",
-    "j13_symbol_resolution", "graph_stress_centrality",
-    "graph_random_walks", "walk_skipgram_pairs", "p7_fixed_projection",
-    "p8_ext_ignore_filters", "o1_commit_list_ordering", "o4_topk_orders",
-    "f6_string_parsing", "f7_json_props", "asof_prior_click",
-    "contamination_ngram", "corpus_stats", "dedup_clusters",
-    "sample_stratified",
-    # dep-impact: reachable symbol changed (150)
-    "ann_lsh_topk", "cypher_frontend_hop", "graph_sssp_bounded",
-    "graph_degree_histogram", "ann_ivf_indexed_topk", "a1_a2_graph_stats",
-    "p2_point_lookup_by_id", "p3_composite_key_lookup",
-    "p4_in_list_lookup", "j1_out_neighbors", "j2_in_neighbors",
-    "j4_subgraph_sample", "j5_two_hop_pattern", "j7_reachable_closure",
-    "j10_unreachable_parts", "x2_prefix_table", "m3_bulk_props",
-    "m4_propagate_coverage", "j9_chain_successor",
+    "m3_bulk_props", "m4_propagate_coverage", "j9_chain_successor",
     "j11_edge_endpoint_validation", "skew_salted_agg", "text_bpe_tokens",
     "text_char_entropy", "text_rolling_fingerprint", "text_tfidf_topterms",
     "value_histogram", "w_session_30m", "w_sliding_1h_30m",
@@ -111,6 +74,10 @@ _PRIORITY = [
     "sample_weighted", "flagship_region_revenue",
     "j12_range_join_coverage", "a3_collect_parts_per_order",
     "f4_unwind_indexed", "a4_ordered_collect", "a5_a6_coverage_ratio",
+    # changed: own symbol differs since green round (5)
+    "curation_pipeline_v2", "curation_pipeline_v3", "curation_pipeline",
+    "curation_gate_ablation", "ann_ivf_indexed_topk",
+    # dep-impact: reachable symbol changed (195)
     "pack_sequences", "pack_sequences_sharded", "sample_temperature",
     "quality_percentile", "s2_cfamily_analyzer", "graph_closeness_approx",
     "p1_point_lookup_by_name", "j6_find_paths", "m7_oplog_replay",
@@ -128,17 +95,16 @@ _PRIORITY = [
     "events_rollup", "events_outliers", "corpus_length_regression",
     "corpus_lang_pivot", "corpus_train_val_split", "skew_salted_join",
     "events_transition_matrix", "graph_edge_embeddedness",
-    "token_budget_select", "curation_pipeline_v2", "curation_pipeline_v3",
-    "events_rfm", "events_lateness_profile", "quality_calibration_bins",
-    "shard_zonemap_prune", "shard_zorder_prune",
-    "graph_eccentricity_bounds", "dedup_semantic_clusters",
-    "graph_modularity", "ann_cosine_topk", "dedup_embedding_cosine",
-    "graph_assortativity", "graph_ppr", "graph_ktruss", "ann_ivf_exact",
-    "emb_hard_negatives", "contamination_bloom", "corpus_heavy_hitters",
-    "graph_scc_bounded", "dedup_containment", "shard_manifest",
-    "quality_linear_score", "w_distinct_users_hll",
-    "shard_manifest_incremental", "corpus_vocab_coverage",
-    "graph_ffl_motifs", "mm_tga_features", "curation_pipeline",
+    "token_budget_select", "events_rfm", "events_lateness_profile",
+    "quality_calibration_bins", "shard_zonemap_prune",
+    "shard_zorder_prune", "graph_eccentricity_bounds",
+    "dedup_semantic_clusters", "graph_modularity", "ann_cosine_topk",
+    "dedup_embedding_cosine", "graph_assortativity", "graph_ppr",
+    "graph_ktruss", "ann_ivf_exact", "emb_hard_negatives",
+    "contamination_bloom", "corpus_heavy_hitters", "graph_scc_bounded",
+    "dedup_containment", "shard_manifest", "quality_linear_score",
+    "w_distinct_users_hll", "shard_manifest_incremental",
+    "corpus_vocab_coverage", "graph_ffl_motifs", "mm_tga_features",
     "gopher_quality_gates", "corpus_mixture_plan", "bpe_fertility_by_lang",
     "text_bigram_logprob", "dedup_lsh_eval", "pack_boundary_stats",
     "dsir_importance_select", "corpus_quantile_summary", "chunk_documents",
@@ -146,15 +112,14 @@ _PRIORITY = [
     "events_user_ewma", "emb_int8_calibration", "chunk_dedup_stats",
     "corpus_lang_confusion", "vocab_zipf_spectrum",
     "graph_clustering_coeff", "graph_triangle_count",
-    "graph_jaccard_neighbors",
-    # cleared / fresh, oldest green first (head = next round's spill) (50)
-    "events_retention_cohorts", "text_readability", "corpus_ccnet_buckets",
-    "emb_matryoshka_overlap", "corpus_source_overlap", "dedup_semdedup",
-    "er_fuzzy_name_pairs", "text_kn_bigram_logprob",
-    "events_trigram_patterns", "text_rake_keywords", "events_outliers_mad",
-    "events_changepoint", "mm_ppm_features", "corpus_cross_entropy_shift",
-    "emb_norm_outliers", "source_template_overlap", "events_stickiness",
-    "emb_centroid_drift", "graph_mst_boruvka", "events_autocorrelation",
+    "graph_jaccard_neighbors", "events_retention_cohorts",
+    "text_readability", "corpus_ccnet_buckets", "emb_matryoshka_overlap",
+    "corpus_source_overlap", "dedup_semdedup", "er_fuzzy_name_pairs",
+    "text_kn_bigram_logprob", "events_trigram_patterns",
+    "text_rake_keywords", "events_outliers_mad", "events_changepoint",
+    "mm_ppm_features", "corpus_cross_entropy_shift", "emb_norm_outliers",
+    "source_template_overlap", "events_stickiness", "emb_centroid_drift",
+    "graph_mst_boruvka", "events_autocorrelation",
     "corpus_simpson_diversity", "graph_butterfly_count", "graph_luby_mis",
     "corpus_pmi_collocations", "orders_basket_rules",
     "events_gini_engagement", "events_seasonality", "events_markov_mixing",
@@ -167,7 +132,24 @@ _PRIORITY = [
     "graph_landmark_distances", "graph_core_decomposition",
     "graph_anf_sketch", "graph_resource_allocation", "m1_merge_upsert",
     "m2_merge_edges", "m5_cascade_delete", "m6_edge_prop_update",
-    "m8_switch_commit_derived",
+    "m8_switch_commit_derived", "j3_callees", "j8_chain_payloads",
+    "p5_null_predicate", "p6_dynamic_filters", "f2_f5_size_contains",
+    "f3_path_functions", "x3_auto_complete", "dq_k_anonymity",
+    "events_window_funnel", "events_slo_burn", "dedup_cluster_sizes",
+    "supply_risk_single_source", "shard_hash_ring",
+    "events_bot_regularity", "events_latency_percentiles",
+    "emb_silhouette_proxy", "graph_rich_club", "corpus_ks_lengths",
+    "j13_symbol_resolution", "graph_stress_centrality",
+    "graph_random_walks", "walk_skipgram_pairs", "p7_fixed_projection",
+    "p8_ext_ignore_filters", "o1_commit_list_ordering", "o4_topk_orders",
+    "f6_string_parsing", "f7_json_props", "asof_prior_click",
+    "contamination_ngram", "corpus_stats", "dedup_clusters",
+    "sample_stratified", "ann_lsh_topk", "cypher_frontend_hop",
+    "graph_sssp_bounded", "graph_degree_histogram", "a1_a2_graph_stats",
+    "p2_point_lookup_by_id", "p3_composite_key_lookup",
+    "p4_in_list_lookup", "j1_out_neighbors", "j2_in_neighbors",
+    "j4_subgraph_sample", "j5_two_hop_pattern", "j7_reachable_closure",
+    "j10_unreachable_parts", "x2_prefix_table",
 ]
 
 

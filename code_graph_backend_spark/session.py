@@ -62,6 +62,51 @@ def _limit_blas_threads() -> None:
         pass
 
 
+# Largest default heap ("48g"): what the 32-core bench host runs with.
+_MAX_HEAP_MB = 48 * 1024
+# cgroup v2, then v1: the memory limit of the container we run in.
+_CGROUP_LIMIT_FILES = (
+    "/sys/fs/cgroup/memory.max",
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+)
+
+
+def _physical_memory_bytes() -> int | None:
+    try:
+        return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError):
+        return None
+
+
+def _cgroup_memory_limit() -> int | None:
+    """The container's memory limit in bytes, or None where none is set."""
+    for path in _CGROUP_LIMIT_FILES:
+        try:
+            with open(path) as fh:
+                text = fh.read().strip()
+        except OSError:
+            continue
+        return int(text) if text.isdigit() else None  # v2 writes "max"
+    return None
+
+
+def driver_memory() -> str:
+    """``spark.driver.memory`` for the local JVM.
+
+    ``$SPARK_GRAFT_DRIVER_MEM`` when set; otherwise 48g or half of the
+    memory the process can use (physical memory, or the cgroup limit
+    where that is lower), whichever is smaller. The other half is for
+    what the JVM holds outside its heap (the 1 GB code cache, metaspace,
+    Netty buffers) and for the Python driver and ``local[N]`` workers.
+    """
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    usable = [m for m in (_physical_memory_bytes(), _cgroup_memory_limit()) if m]
+    half_mb = min(usable) // 2 // (1024 * 1024) if usable else _MAX_HEAP_MB
+    return "48g" if half_mb >= _MAX_HEAP_MB else f"{half_mb}m"
+
+
 def get_spark(
     app_name: str = "code-graph-backend-spark",
     master: str | None = None,
@@ -86,8 +131,11 @@ def get_spark(
         .master(master)
         # Heap for the single local JVM (driver == executors in local mode).
         # Must be set before getOrCreate — PySpark forwards it to the JVM
-        # launch. Default 1g OOMs iterative/cached workloads on this box.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        # launch. Spark's 1g default OOMs iterative/cached workloads, but
+        # the heap must also fit the host: an oversized heap is not an
+        # OutOfMemoryError, the kernel kills the whole JVM once its RSS
+        # outgrows RAM (see driver_memory).
+        .config("spark.driver.memory", driver_memory())
         .config("spark.driver.maxResultSize", "4g")
         # Whole-stage codegen emits one JIT-compiled class per plan; a long
         # session (40+ distinct queries) fills the JVM's default 240 MB code
