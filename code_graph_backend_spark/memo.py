@@ -19,6 +19,8 @@ shared curation gates. All of it goes through `cached`.
   and edges, unless a live entry holds a DataFrame of the same plan. A
   caller that still holds an evicted DataFrame recomputes it from its
   lineage, with the same rows.
+- `invalidate` drops entries whose source is gone (a deleted or rewritten
+  stored graph) before LRU would, releasing them as eviction does.
 """
 
 from __future__ import annotations
@@ -39,7 +41,7 @@ from .graph.model import PropertyGraph
 _CAP = 128
 
 _CACHE: OrderedDict = OrderedDict()
-_STATS = {"hits": 0, "misses": 0, "evictions": 0, "peak": 0}
+_STATS = {"hits": 0, "misses": 0, "evictions": 0, "invalidations": 0, "peak": 0}
 
 
 def cached(spark: SparkSession, key: tuple, build: Callable[[], Any]) -> Any:
@@ -60,6 +62,26 @@ def cached(spark: SparkSession, key: tuple, build: Callable[[], Any]) -> Any:
         _STATS["evictions"] += 1
     _STATS["peak"] = max(_STATS["peak"], len(_CACHE))
     return value
+
+
+def invalidate(spark: SparkSession, match: Callable[[tuple], bool]) -> int:
+    """Drop every entry of `spark` whose key, less the session, satisfies
+    `match`, and every entry keyed on a DataFrame a dropped entry held
+    (state derived from it, such as a graph handle's typed edge sets).
+    Each is released as eviction releases it. Returns the number
+    dropped."""
+    doomed = {k for k in _CACHE if k[0] is spark and match(k[1:])}
+    while True:
+        held = [d for k in doomed for d in _frames(_CACHE[k])]
+        more = {k for k in _CACHE if k not in doomed and any(p is d for p in k for d in held)}
+        if not more:
+            break
+        doomed |= more
+    gone = [_CACHE.pop(k) for k in doomed]
+    for value in gone:
+        _release(value)
+    _STATS["invalidations"] += len(gone)
+    return len(gone)
 
 
 def _frames(value: Any):
@@ -99,5 +121,6 @@ def _release(value: Any) -> None:
 
 
 def stats() -> dict:
-    """Hit, miss and eviction counts, live entries and their peak."""
+    """Hit, miss, eviction and invalidation counts, live entries and
+    their peak."""
     return {**_STATS, "entries": len(_CACHE)}

@@ -115,11 +115,12 @@ def _adjacency(entry: dict) -> dict[int, list[int]]:
     return adj
 
 
-def _local_find_paths(
-    spark: SparkSession, adj: dict[int, list[int]], src_id: int, dst_id: int, max_depth: int
-) -> DataFrame:
+def simple_paths(adj, src_id: int, dst_id: int, max_depth: int) -> list[tuple[list[int], int]]:
     """Driver-side twin of the distributed path loop (same semantics: simple
-    paths, depth cap, no extension past dst)."""
+    paths, depth cap, no extension past dst): every (path, depth), sorted
+    by (depth, path). `adj.get(node, ())` gives a node's successors, one
+    per edge, so a multi-edge yields its path once per edge, as the join
+    does."""
     out: list[tuple[list[int], int]] = []
     stack: list[tuple[int, list[int]]] = [(src_id, [src_id])]
     while stack:
@@ -134,9 +135,8 @@ def _local_find_paths(
                 out.append((p2, len(p2) - 1))
             else:
                 stack.append((d, p2))
-    if not out:
-        return spark.createDataFrame([], "path array<long>, depth int")
-    return spark.createDataFrame(out, "path array<long>, depth int").orderBy("depth", "path")
+    out.sort(key=lambda r: (r[1], r[0]))
+    return out
 
 
 def find_paths(
@@ -157,7 +157,8 @@ def find_paths(
     ent = _typed_edges(edges, edge_type)
     e, n_e = ent["df"], ent["n"]
     if ent["pdf"] is not None:
-        return _local_find_paths(spark, _adjacency(ent), int(src_id), int(dst_id), max_depth)
+        out = simple_paths(_adjacency(ent), int(src_id), int(dst_id), max_depth)
+        return spark.createDataFrame(out, "path array<long>, depth int").orderBy("depth", "path")
 
     frontier = spark.createDataFrame(
         [(int(src_id), [int(src_id)])], "head long, path array<long>"

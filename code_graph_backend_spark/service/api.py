@@ -3,6 +3,15 @@
 query layer too — what matters for parity is request → operator → JSON-able
 result, which these methods reproduce 1:1.
 
+Reads come from one cached handle per stored version of a graph
+(`CodeGraphService._graph`). While the stored graph is under
+`resident.ROW_CAP` rows, `get_neighbors`, `find_paths`, `graph_entities`,
+`auto_complete` and `repo_info` answer from a driver-resident copy built
+once per version (`CodeGraphService._resident`, service/resident.py) and
+launch no Spark job; above the cap, and for `chat` and `list_commits`, the
+Spark operators serve. Both paths give the same answers. The repo side
+store (`RepoInfoStore`) is read from parquet once per file version.
+
 Result encoding mirrors api/entities/entity_encoder.py:3-24: nodes/edges as
 dicts, `Searchable` stripped from labels.
 """
@@ -18,9 +27,10 @@ from pyspark.sql import Row, SparkSession
 from pyspark.sql import functions as F
 
 from ..graph.model import PropertyGraph
-from ..memo import cached
+from ..memo import cached, invalidate
 from ..operators import lookups, neighbors, search, traversal
 from ..operators.aggregates import counts
+from .resident import ResidentGraph
 
 
 class RepoInfoStore:
@@ -29,19 +39,35 @@ class RepoInfoStore:
     (api/info.py:9-88): a tiny single-file parquet table under the storage
     root (SURVEY §1.6), surviving process restarts. Rows are per-repo and
     request-sized; writes go through temp+rename so a crash never corrupts
-    the table."""
+    the table. The decoded table is kept in process and re-read only when
+    the file's (inode, mtime) changes, the version `_graph` keys on too,
+    so a read launches no Spark job while another writer leaves the file
+    alone."""
 
     _SCHEMA = "repo string, info string"  # info = JSON dict
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.path = os.path.join(root, "_repo_info.parquet")
+        self._version: tuple | None = None
+        self._data: dict[str, dict] = {}
+
+    def _stat(self) -> tuple | None:
+        try:
+            s = os.stat(self.path)
+        except FileNotFoundError:
+            return None
+        return s.st_ino, s.st_mtime_ns
 
     def _read_all(self) -> dict[str, dict]:
-        if not os.path.exists(self.path):
+        version = self._stat()
+        if version is None:
             return {}
-        df = self.spark.read.schema(self._SCHEMA).parquet(self.path)
-        return {r["repo"]: json.loads(r["info"]) for r in df.collect()}
+        if version != self._version:
+            df = self.spark.read.schema(self._SCHEMA).parquet(self.path)
+            self._data = {r["repo"]: json.loads(r["info"]) for r in df.collect()}
+            self._version = version
+        return self._data
 
     def _write_all(self, data: dict[str, dict]) -> None:
         rows = [(k, json.dumps(v, sort_keys=True)) for k, v in sorted(data.items())]
@@ -53,17 +79,18 @@ class RepoInfoStore:
         if os.path.exists(self.path):
             shutil.rmtree(self.path)
         os.rename(tmp, self.path)
+        self._version, self._data = self._stat(), data
 
     def get(self, repo: str) -> dict:
-        return self._read_all().get(repo, {})
+        return dict(self._read_all().get(repo, {}))
 
     def set(self, repo: str, **kv) -> None:
-        data = self._read_all()
-        data.setdefault(repo, {}).update(kv)
+        data = dict(self._read_all())
+        data[repo] = {**data.get(repo, {}), **kv}
         self._write_all(data)
 
     def delete(self, repo: str) -> None:
-        data = self._read_all()
+        data = dict(self._read_all())
         if data.pop(repo, None) is not None:
             self._write_all(data)
 
@@ -89,27 +116,50 @@ class CodeGraphService:
         self.root = root
         self._info = RepoInfoStore(spark, root)  # persistent side-store
 
+    def _version(self, name: str) -> tuple | None:
+        """The (inode, mtime) of the stored graph's nodes and edges
+        directories, None when it is not stored. `save()` writes each to a
+        new directory and renames it into place, so a rewrite always
+        changes it."""
+        d = os.path.join(self.root, name)
+        try:
+            return tuple(
+                (s.st_ino, s.st_mtime_ns)
+                for s in (os.stat(os.path.join(d, p)) for p in ("nodes", "edges"))
+            )
+        except OSError:
+            return None
+
     def _graph(self, name: str) -> PropertyGraph:
         """The stored graph `name` as one handle per stored version.
 
         Reads share the handle, so state keyed on its DataFrames (the
         typed edge sets of `traversal._typed_edges`) is built once per
-        version, not once per request. The version is the (inode, mtime)
-        of the nodes and edges directories: `save()` writes each to a new
-        directory and renames it into place, so a rewrite always changes
-        it. Write paths load their own graph, since `save()` re-points the
-        graph it is called on. A graph that is not stored falls through to
-        `load`, which raises as before."""
-        d = os.path.join(self.root, name)
-        try:
-            version = tuple(
-                (s.st_ino, s.st_mtime_ns)
-                for s in (os.stat(os.path.join(d, p)) for p in ("nodes", "edges"))
-            )
-        except OSError:
+        version, not once per request. Write paths load their own graph,
+        since `save()` re-points the graph it is called on. A graph that
+        is not stored falls through to `load`, which raises as before."""
+        version = self._version(name)
+        if version is None:
             return PropertyGraph.load(self.spark, self.root, name)
         return cached(self.spark, ("stored_graph", self.root, name, version),
                       lambda: PropertyGraph.load(self.spark, self.root, name))
+
+    def _resident(self, name: str) -> ResidentGraph | None:
+        """The driver-resident copy of the stored graph `name`, one per
+        stored version like `_graph`; None when the graph is over
+        `resident.ROW_CAP` rows or not stored, and the Spark path
+        serves."""
+        version = self._version(name)
+        if version is None:
+            return None
+        return cached(self.spark, ("resident_graph", self.root, name, version),
+                      lambda: ResidentGraph.build(self._graph(name), _encode_node))
+
+    def _forget(self, name: str) -> None:
+        """Release every cached handle and copy of `name`, and what was
+        derived from them, as eviction would."""
+        invalidate(self.spark, lambda k: k[0] in ("stored_graph", "resident_graph")
+                   and k[1:3] == (self.root, name))
 
     # -- read endpoints ---------------------------------------------------
 
@@ -119,31 +169,36 @@ class CodeGraphService:
 
     def repo_info(self, repo: str) -> dict:
         """POST /repo_info (reference api/index.py:205-248, A1+A2+side-store)."""
-        g = self._graph(repo)
-        row = counts(g.nodes, g.edges).collect()[0]
-        info = self._info.get(repo)
-        return {
-            "repo": repo,
-            "node_count": row["node_count"],
-            "edge_count": row["edge_count"],
-            **info,
-        }
+        r = self._resident(repo)
+        if r is not None:
+            n, e = r.node_count, r.edge_count
+        else:
+            g = self._graph(repo)
+            n, e = counts(g.nodes, g.edges).collect()[0]
+        return {"repo": repo, "node_count": n, "edge_count": e, **self._info.get(repo)}
 
     def graph_entities(self, repo: str, limit: int = 500) -> dict:
         """POST /graph_entities (reference api/index.py:53-94, J4+O3)."""
-        g = self._graph(repo)
-        rows = neighbors.sub_graph(g.nodes, g.edges, limit).collect()
+        r = self._resident(repo)
+        if r is not None:
+            rows = r.sub_graph(limit)
+        else:
+            g = self._graph(repo)
+            rows = neighbors.sub_graph(g.nodes, g.edges, limit).collect()
         nodes, edges = {}, []
-        for r in rows:
-            nodes[r["src_id"]] = {"id": r["src_id"], "name": r["src_name"]}
-            if r["edge_type"] is not None:
-                nodes[r["dst_id"]] = {"id": r["dst_id"], "name": r["dst_name"]}
-                edges.append({"src": r["src_id"], "dst": r["dst_id"], "type": r["edge_type"]})
+        for src_id, src_name, edge_type, dst_id, dst_name in rows:
+            nodes[src_id] = {"id": src_id, "name": src_name}
+            if edge_type is not None:
+                nodes[dst_id] = {"id": dst_id, "name": dst_name}
+                edges.append({"src": src_id, "dst": dst_id, "type": edge_type})
         return {"nodes": list(nodes.values()), "edges": edges}
 
     def get_neighbors(self, repo: str, node_ids: list[int],
                       edge_type: str | None = None, label: str | None = None) -> list[dict]:
         """POST /get_neighbors (reference api/index.py:97-144, J1)."""
+        r = self._resident(repo)
+        if r is not None:
+            return r.out_neighbors(node_ids, edge_type, label)
         g = self._graph(repo)
         rows = neighbors.out_neighbors(
             self.spark, g.nodes, g.edges, node_ids, edge_type, label
@@ -152,6 +207,9 @@ class CodeGraphService:
 
     def auto_complete(self, repo: str, prefix: str) -> list[dict]:
         """POST /auto_complete (reference api/index.py:146-182, X3)."""
+        r = self._resident(repo)
+        if r is not None:
+            return r.auto_complete(prefix)
         g = self._graph(repo)
         return [_encode_node(r) for r in search.auto_complete(g.nodes, prefix).collect()]
 
@@ -162,25 +220,30 @@ class CodeGraphService:
         (reference api/graph.py:577-591); invariant: odd length, endpoints
         match src/dest (tests/endpoints/test_find_paths.py:76-80).
         """
-        g = self._graph(repo)
-        paths = traversal.find_paths(
-            self.spark, g.edges, src, dest, edge_type="CALLS", max_depth=max_depth
-        ).collect()
-        # Collect ONLY the nodes appearing on the returned paths (bounded by
-        # path count × depth), never the whole nodes table — at 100 TB the
-        # full collect is a driver OOM. The IN-list filter pushes to the
-        # parquet scan; result size == len(path_ids).
-        path_ids = sorted({nid for p in paths for nid in p["path"]})
-        node_rows = {
-            r["id"]: _encode_node(r)
-            for r in g.nodes.filter(F.col("id").isin(path_ids)).collect()
-        } if path_ids else {}
+        r = self._resident(repo)
+        if r is not None:
+            paths = r.find_paths(src, dest, "CALLS", max_depth)
+            node = r.node
+        else:
+            g = self._graph(repo)
+            paths = traversal.find_paths(
+                self.spark, g.edges, src, dest, edge_type="CALLS", max_depth=max_depth
+            ).collect()
+            # Collect ONLY the nodes appearing on the returned paths (bounded
+            # by path count × depth), never the whole nodes table — at 100 TB
+            # the full collect is a driver OOM. The IN-list filter pushes to
+            # the parquet scan; result size == len(path_ids).
+            path_ids = sorted({nid for p in paths for nid in p["path"]})
+            node_rows = {
+                row["id"]: _encode_node(row)
+                for row in g.nodes.filter(F.col("id").isin(path_ids)).collect()
+            } if path_ids else {}
+            node = node_rows.get
         out = []
-        for p in paths:
-            ids = p["path"]
+        for ids, _depth in paths:
             seq: list = []
             for i, nid in enumerate(ids):
-                seq.append(node_rows.get(nid, {"id": nid}))
+                seq.append(node(nid) or {"id": nid})
                 if i < len(ids) - 1:
                     seq.append({"src": nid, "dst": ids[i + 1], "type": "CALLS"})
             out.append(seq)
@@ -356,7 +419,7 @@ class CodeGraphService:
         `ignore` is the caller's exclude list (reference
         analyzer.analyze_local_folder(path, g, ignore)) — path substrings
         filtered out of the scan alongside the built-in dep containers."""
-        from ..sources.python_analyzer import analyze_python_files
+        from ..sources.python_analyzer import graph_from_parsed, parse_files
         from ..sources.source_scan import scan_source_tree
 
         from ..sources.dependencies import add_dependency_sources
@@ -381,9 +444,16 @@ class CodeGraphService:
         files = files.withColumn(
             "path", F.replace(F.col("path"), F.lit(prefix), F.lit(""))
         )
-        nodes, edges = analyze_python_files(self.spark, files)
+        parsed = parse_files(files)
+        nodes, edges = graph_from_parsed(self.spark, parsed)
         g = PropertyGraph(self.spark, name, nodes, edges, root=self.root)
-        g.save()
+        try:
+            g.save()
+        finally:
+            # graph_from_parsed cached the parse; a later scan of this path
+            # has the same plan, so Spark would serve this parse again
+            parsed.unpersist()
+        self._forget(name)
         n, e = g.counts()
         return {"repo": name, "nodes": n, "edges": e}
 
@@ -494,6 +564,7 @@ class CodeGraphService:
         g = PropertyGraph.load(self.spark, self.root, repo)
         g = oplog.replay_path(g, commit_path)
         g.save()
+        self._forget(repo)
         self._info.set(repo, commit=target_commit)
         n, e = g.counts()
         return {"repo": repo, "commit": target_commit, "nodes": n, "edges": e}
@@ -502,6 +573,7 @@ class CodeGraphService:
         g = PropertyGraph.load(self.spark, self.root, repo)
         g.drop()
         self._info.delete(repo)
+        self._forget(repo)
         return {"deleted": repo}
 
 

@@ -44,6 +44,16 @@ def test_cap_is_never_exceeded(spark, small_cache):
     assert memo.stats()["evictions"] - before == 7
 
 
+def test_invalidate_drops_matches_and_entries_keyed_on_them(spark, small_cache):
+    src = spark.range(3).cache()
+    memo.cached(spark, ("src", "a"), lambda: src)
+    derived = memo.cached(spark, ("derived", src), lambda: spark.range(2).cache())
+    memo.cached(spark, ("src", "b"), lambda: 1)
+    assert memo.invalidate(spark, lambda k: k == ("src", "a")) == 2
+    assert [k[1:] for k in memo._CACHE] == [("src", "b")]
+    assert not src.storageLevel.useMemory and not derived.storageLevel.useMemory
+
+
 def test_hit_refreshes_recency(spark, small_cache):
     for k in "abc":
         memo.cached(spark, ("t", k), lambda k=k: k)

@@ -146,6 +146,52 @@ def test_reads_share_one_graph_handle_per_stored_version(svc, tmp_path):
     svc.delete_repo("versioned")
 
 
+def test_reanalysis_serves_the_new_state(svc, tmp_path):
+    """A second analyze_folder of a changed path stores and serves the new
+    source, not the first parse."""
+    (tmp_path / "a.py").write_text("def f():\n    return g()\n\ndef g():\n    return 1\n")
+    svc.analyze_folder(str(tmp_path), "again")
+    assert svc.auto_complete("again", "h") == []
+    with open(tmp_path / "a.py", "a") as fh:
+        fh.write("\ndef h():\n    return f()\n")
+    (tmp_path / "b.py").write_text("def k():\n    return 1\n")
+    svc.analyze_folder(str(tmp_path), "again")
+    assert [n["name"] for n in svc.auto_complete("again", "h")] == ["h"]
+    ids = {n["name"]: n["id"] for n in svc.auto_complete("again", "")}
+    assert set(ids) == {"a.py", "b.py", "f", "g", "h", "k"}
+    assert [n["name"] for n in svc.get_neighbors("again", [ids["h"]], "CALLS")] == ["f"]
+    svc.delete_repo("again")
+
+
+def test_repo_info_store_is_shared_through_the_file(svc, spark):
+    """The side store's in-process copy follows the file: a fresh service
+    over the same root reads what was stored, and each sees the other's
+    writes."""
+    fresh = CodeGraphService(spark, svc.root)
+    assert fresh.repo_info("fixture")["commit"] == svc.repo_info("fixture")["commit"]
+    fresh._info.set("fixture", note="from fresh")
+    assert svc.repo_info("fixture")["note"] == "from fresh"
+
+
+def test_delete_repo_releases_its_cached_state(svc, tmp_path):
+    from code_graph_backend_spark import memo
+    from code_graph_backend_spark.operators.traversal import _typed_edges
+
+    (tmp_path / "solo.py").write_text("def f():\n    return g()\n\ndef g():\n    return 1\n")
+    svc.analyze_folder(str(tmp_path), "gone")
+    g = svc._graph("gone")
+    assert svc._resident("gone") is not None
+    _typed_edges(g.edges, "CALLS")
+
+    def naming():
+        return [k for k in memo._CACHE
+                if k[2:4] == (svc.root, "gone") or any(p is g.edges for p in k)]
+
+    assert len(naming()) == 3  # handle, resident copy, typed edge set
+    svc.delete_repo("gone")
+    assert naming() == []
+
+
 def test_delete_repo(svc, spark, tmp_path):
     (tmp_path / "solo.py").write_text("def f():\n    return 1\n")
     svc.analyze_folder(str(tmp_path), "doomed")
