@@ -5,12 +5,15 @@ result, which these methods reproduce 1:1.
 
 Reads come from one cached handle per stored version of a graph
 (`CodeGraphService._graph`). While the stored graph is under
-`resident.ROW_CAP` rows, `get_neighbors`, `find_paths`, `graph_entities`,
-`auto_complete` and `repo_info` answer from a driver-resident copy built
-once per version (`CodeGraphService._resident`, service/resident.py) and
-launch no Spark job; above the cap, and for `chat` and `list_commits`, the
-Spark operators serve. Both paths give the same answers. The repo side
-store (`RepoInfoStore`) is read from parquet once per file version.
+`resident.ROW_CAP` rows, every read endpoint (`get_neighbors`,
+`find_paths`, `graph_entities`, `auto_complete`, `repo_info`,
+`list_commits`, and each compiled `chat` intent) answers from a
+driver-resident copy built once per version (`CodeGraphService._resident`,
+service/resident.py) and launches no Spark job; above the cap `SparkReads`
+serves the same calls with the Spark operators. Both give the same
+answers. Raw Cypher through `chat` always runs on Spark, as do the
+registry queries. The repo side store (`RepoInfoStore`) is read from
+parquet once per file version.
 
 Result encoding mirrors api/entities/entity_encoder.py:3-24: nodes/edges as
 dicts, `Searchable` stripped from labels.
@@ -23,7 +26,7 @@ import os
 import re
 import time
 
-from pyspark.sql import Row, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from ..graph.model import PropertyGraph
@@ -107,6 +110,167 @@ def _encode_node(row: Row) -> dict:
     return out
 
 
+class SparkReads:
+    """The read primitives over a stored graph's DataFrames, each one Spark
+    job or more: what serves a graph over `resident.ROW_CAP` rows.
+    `ResidentGraph` has a method of the same name and answer for each."""
+
+    def __init__(self, spark: SparkSession, g: PropertyGraph):
+        self.spark, self.nodes, self.edges = spark, g.nodes, g.edges
+
+    def _labelled(self, label: str | None) -> DataFrame:
+        return self.nodes if label is None else lookups.by_label(self.nodes, label)
+
+    @staticmethod
+    def _encoded(df: DataFrame) -> list[dict]:
+        return [_encode_node(r) for r in df.collect()]
+
+    def counts(self) -> tuple[int, int]:
+        n, e = counts(self.nodes, self.edges).collect()[0]
+        return n, e
+
+    def count(self, label: str | None = None) -> int:
+        return self._labelled(label).count()
+
+    def count_edges(self) -> int:
+        return self.edges.count()
+
+    def nodes_by_id(self, ids) -> dict[int, dict]:
+        # An IN-list of the asked ids only, pushed to the parquet scan: at
+        # 100 TB a collect of the whole nodes table is a driver OOM.
+        ids = sorted(ids)
+        return {r["id"]: _encode_node(r) for r in
+                self.nodes.filter(F.col("id").isin(ids)).collect()} if ids else {}
+
+    def out_neighbors(self, ids, edge_type: str | None = None,
+                      dest_label: str | None = None) -> list[dict]:
+        return self._encoded(neighbors.out_neighbors(
+            self.spark, self.nodes, self.edges, ids, edge_type, dest_label))
+
+    def named(self, name: str, label: str | None = None) -> DataFrame:
+        return self._labelled(label).filter(F.col("name") == name).select("id")
+
+    def lowest_ids(self, names) -> dict[str, int]:
+        return dict(self.nodes.filter(F.col("name").isin(list(names)))
+                    .groupBy("name").agg(F.min("id")).collect())
+
+    def hop(self, seeds: DataFrame, edge_type: str, direction: str,
+            label: str | None = None) -> list[dict]:
+        near, far = ("src", "dst") if direction == "out" else ("dst", "src")
+        ends = (self.edges.filter(F.col("type") == edge_type)
+                .join(seeds.withColumnRenamed("id", near), near)
+                .select(F.col(far).alias("id")))
+        return self._encoded(self._labelled(label).join(ends, "id"))
+
+    def scan(self, label: str, text: str | None = None, limit: int | None = None) -> list[dict]:
+        n = self._labelled(label)
+        if text is not None:
+            n = n.filter(F.col("name").contains(text))
+        return self._encoded(n if limit is None else n.orderBy("id").limit(limit))
+
+    def unreachable(self, label: str | None) -> list[dict]:
+        return self._encoded(neighbors.unreachable(
+            self.nodes, self.edges, edge_type="CALLS", label=label))
+
+    def most_called(self, k: int) -> list[dict]:
+        rows = (
+            self.edges.filter(F.col("type") == "CALLS")
+            .groupBy("dst").agg(F.count("*").alias("usage_count"))
+            .join(self.nodes, F.col("dst") == self.nodes["id"])
+            .orderBy(F.desc("usage_count"), "name")
+            .limit(k)
+            .select("name", "usage_count")
+            .collect()
+        )
+        return [{"name": r["name"], "usage_count": r["usage_count"]} for r in rows]
+
+    def least_covered(self, k: int) -> list[dict]:
+        rows = (
+            lookups.by_label(self.nodes, "File")
+            .filter(F.col("coverage").isNotNull())
+            .orderBy(F.col("coverage").asc(), "name")
+            .limit(k)
+            .select("name", "coverage")
+            .collect()
+        )
+        return [{"name": r["name"], "coverage": r["coverage"]} for r in rows]
+
+    def commits(self) -> list[dict]:
+        return self._encoded(lookups.by_label(self.nodes, "Commit")
+                             .orderBy(F.col("props").getItem("date").try_cast("long"), "id"))
+
+    def sub_graph(self, limit: int) -> list[Row]:
+        return neighbors.sub_graph(self.nodes, self.edges, limit).collect()
+
+    def auto_complete(self, prefix: str, limit: int = 10) -> list[dict]:
+        return self._encoded(search.auto_complete(self.nodes, prefix, limit))
+
+    def find_paths(self, src: int, dst: int, edge_type: str, max_depth: int) -> list[Row]:
+        return traversal.find_paths(self.spark, self.edges, src, dst,
+                                    edge_type=edge_type, max_depth=max_depth).collect()
+
+
+def _paths(r: "ResidentGraph | SparkReads", src: int, dest: int,
+           max_depth: int = 12) -> list[list]:
+    """The CALLS paths from `src` to `dest`, each as interleaved [node,
+    edge, node, ...] dicts; a path's node that no node row has is given
+    as its id alone."""
+    paths = r.find_paths(src, dest, "CALLS", max_depth)
+    node = r.nodes_by_id({nid for ids, _ in paths for nid in ids}).get
+    out = []
+    for ids, _depth in paths:
+        seq: list = []
+        for i, nid in enumerate(ids):
+            seq.append(node(nid) or {"id": nid})
+            if i < len(ids) - 1:
+                seq.append({"src": nid, "dst": ids[i + 1], "type": "CALLS"})
+        out.append(seq)
+    return out
+
+
+def _paths_by_name(r, a: dict) -> list[list]:
+    """The `paths` intent: paths between the lowest-id nodes called
+    a["src"] and a["dest"] (as `lookups.point_by_name` picks one)."""
+    ids = r.lowest_ids([a["src"], a["dest"]])
+    if a["src"] not in ids or a["dest"] not in ids:
+        return []
+    return _paths(r, ids[a["src"]], ids[a["dest"]])
+
+
+def _hop(edge_type: str, direction: str, label: str | None = None):
+    """An intent answered by the far ends of the `edge_type` edges at the
+    nodes called a["name"]."""
+    return lambda r, a: r.hop(r.named(a["name"]), edge_type, direction, label)
+
+
+# /chat's one dispatch: each compiled intent (chat.VALID_INTENTS) as its
+# answer from a graph's read primitives `r` (a ResidentGraph, or SparkReads
+# over the cap) and the plan's args. The intents in _ON_GIT_GRAPH read the
+# repo's commit graph, `{repo}_git`.
+CHAT_INTENTS = {
+    "count_label": lambda r, a: r.count(a["label"]),
+    "count_nodes": lambda r, a: r.count(),
+    "count_edges": lambda r, a: r.count_edges(),
+    "count_commits": lambda r, a: r.count("Commit"),
+    "list_commits": lambda r, a: r.commits(),
+    "unreachable": lambda r, a: r.unreachable(a.get("label")),
+    "most_called": lambda r, a: r.most_called(a["k"]),
+    "least_covered": lambda r, a: r.least_covered(a.get("k", 10)),
+    "prefix_search": lambda r, a: r.auto_complete(a["prefix"]),
+    "name_contains": lambda r, a: r.scan(a["label"], text=a["text"]),
+    "list_label": lambda r, a: r.scan(a["label"], limit=a["k"]),
+    "paths": _paths_by_name,
+    "callers": _hop("CALLS", "in"),
+    "callees": _hop("CALLS", "out"),
+    "defined_in": _hop("DEFINES", "in", "File"),
+    "extends": _hop("EXTENDS", "in"),
+    "implements": _hop("IMPLEMENTS", "in"),
+    "entities_in_file": lambda r, a: r.hop(r.named(a["file"], "File"), "DEFINES", "out",
+                                           a.get("label", "Function")),
+}
+_ON_GIT_GRAPH = frozenset({"count_commits", "list_commits"})
+
+
 class CodeGraphService:
     """One instance per storage root; graphs addressed by repo name
     (reference keeps one FalkorDB graph per repo, api/graph.py:35-45)."""
@@ -155,6 +319,12 @@ class CodeGraphService:
         return cached(self.spark, ("resident_graph", self.root, name, version),
                       lambda: ResidentGraph.build(self._graph(name), _encode_node))
 
+    def _reads(self, name: str) -> ResidentGraph | SparkReads:
+        """The read primitives of the stored graph `name`: its resident
+        copy, else the Spark operators over its handle."""
+        r = self._resident(name)
+        return r if r is not None else SparkReads(self.spark, self._graph(name))
+
     def _forget(self, name: str) -> None:
         """Release every cached handle and copy of `name`, and what was
         derived from them, as eviction would."""
@@ -169,24 +339,13 @@ class CodeGraphService:
 
     def repo_info(self, repo: str) -> dict:
         """POST /repo_info (reference api/index.py:205-248, A1+A2+side-store)."""
-        r = self._resident(repo)
-        if r is not None:
-            n, e = r.node_count, r.edge_count
-        else:
-            g = self._graph(repo)
-            n, e = counts(g.nodes, g.edges).collect()[0]
+        n, e = self._reads(repo).counts()
         return {"repo": repo, "node_count": n, "edge_count": e, **self._info.get(repo)}
 
     def graph_entities(self, repo: str, limit: int = 500) -> dict:
         """POST /graph_entities (reference api/index.py:53-94, J4+O3)."""
-        r = self._resident(repo)
-        if r is not None:
-            rows = r.sub_graph(limit)
-        else:
-            g = self._graph(repo)
-            rows = neighbors.sub_graph(g.nodes, g.edges, limit).collect()
         nodes, edges = {}, []
-        for src_id, src_name, edge_type, dst_id, dst_name in rows:
+        for src_id, src_name, edge_type, dst_id, dst_name in self._reads(repo).sub_graph(limit):
             nodes[src_id] = {"id": src_id, "name": src_name}
             if edge_type is not None:
                 nodes[dst_id] = {"id": dst_id, "name": dst_name}
@@ -196,22 +355,11 @@ class CodeGraphService:
     def get_neighbors(self, repo: str, node_ids: list[int],
                       edge_type: str | None = None, label: str | None = None) -> list[dict]:
         """POST /get_neighbors (reference api/index.py:97-144, J1)."""
-        r = self._resident(repo)
-        if r is not None:
-            return r.out_neighbors(node_ids, edge_type, label)
-        g = self._graph(repo)
-        rows = neighbors.out_neighbors(
-            self.spark, g.nodes, g.edges, node_ids, edge_type, label
-        ).collect()
-        return [_encode_node(r) for r in rows]
+        return self._reads(repo).out_neighbors(node_ids, edge_type, label)
 
     def auto_complete(self, repo: str, prefix: str) -> list[dict]:
         """POST /auto_complete (reference api/index.py:146-182, X3)."""
-        r = self._resident(repo)
-        if r is not None:
-            return r.auto_complete(prefix)
-        g = self._graph(repo)
-        return [_encode_node(r) for r in search.auto_complete(g.nodes, prefix).collect()]
+        return self._reads(repo).auto_complete(prefix)
 
     def find_paths(self, repo: str, src: int, dest: int, max_depth: int = 12) -> list[list]:
         """POST /find_paths (reference api/index.py:250-303, J6).
@@ -220,44 +368,11 @@ class CodeGraphService:
         (reference api/graph.py:577-591); invariant: odd length, endpoints
         match src/dest (tests/endpoints/test_find_paths.py:76-80).
         """
-        r = self._resident(repo)
-        if r is not None:
-            paths = r.find_paths(src, dest, "CALLS", max_depth)
-            node = r.node
-        else:
-            g = self._graph(repo)
-            paths = traversal.find_paths(
-                self.spark, g.edges, src, dest, edge_type="CALLS", max_depth=max_depth
-            ).collect()
-            # Collect ONLY the nodes appearing on the returned paths (bounded
-            # by path count × depth), never the whole nodes table — at 100 TB
-            # the full collect is a driver OOM. The IN-list filter pushes to
-            # the parquet scan; result size == len(path_ids).
-            path_ids = sorted({nid for p in paths for nid in p["path"]})
-            node_rows = {
-                row["id"]: _encode_node(row)
-                for row in g.nodes.filter(F.col("id").isin(path_ids)).collect()
-            } if path_ids else {}
-            node = node_rows.get
-        out = []
-        for ids, _depth in paths:
-            seq: list = []
-            for i, nid in enumerate(ids):
-                seq.append(node(nid) or {"id": nid})
-                if i < len(ids) - 1:
-                    seq.append({"src": nid, "dst": ids[i + 1], "type": "CALLS"})
-            out.append(seq)
-        return out
+        return _paths(self._reads(repo), src, dest, max_depth)
 
     def list_commits(self, repo: str) -> list[dict]:
         """POST /list_commits (reference api/index.py:453-489, O1)."""
-        g = self._graph(f"{repo}_git")
-        rows = (
-            g.nodes.filter(F.array_contains("labels", "Commit"))
-            .orderBy(F.col("props").getItem("date").cast("long"))
-            .collect()
-        )
-        return [_encode_node(r) for r in rows]
+        return self._reads(f"{repo}_git").commits()
 
     def chat(self, repo: str, question: str) -> dict:
         """POST /chat (reference api/index.py:305-328): text → query.
@@ -265,10 +380,10 @@ class CodeGraphService:
         The reference ships the ontology to an LLM that emits Cypher and
         executes it (api/llm.py:237-267). Here the GENERATION step is the
         deterministic compiler in service/chat.py (same ontology, a
-        ChatPlan instead of Cypher text); execution dispatches onto the
-        same public operators every endpoint uses. The returned `query` is
-        the Cypher-equivalent statement, mirroring the reference's
-        response shape."""
+        ChatPlan instead of Cypher text); execution looks the plan's
+        intent up in `CHAT_INTENTS`, over the same read primitives every
+        endpoint uses. The returned `query` is the Cypher-equivalent
+        statement, mirroring the reference's response shape."""
         from .chat import compile_question
 
         # Raw Cypher passes straight through the read front-end — the
@@ -294,120 +409,9 @@ class CodeGraphService:
         plan = compile_question(question)
         if plan is None:
             return {"answer": None, "query": None, "error": "could not compile question"}
-        g = self._graph(repo)
-        i, a = plan.intent, plan.args
-
-        if i == "count_label":
-            ans = lookups.by_label(g.nodes, a["label"]).count()
-        elif i == "count_nodes":
-            ans = g.nodes.count()
-        elif i == "count_edges":
-            ans = g.edges.count()
-        elif i == "count_commits":
-            gg = self._graph(f"{repo}_git")
-            ans = gg.nodes.filter(F.array_contains("labels", "Commit")).count()
-        elif i == "unreachable":
-            rows = neighbors.unreachable(
-                g.nodes, g.edges, edge_type="CALLS", label=a.get("label")
-            ).collect()
-            ans = [_encode_node(r) for r in rows]
-        elif i == "most_called":
-            rows = (
-                g.edges.filter(F.col("type") == "CALLS")
-                .groupBy("dst").agg(F.count("*").alias("usage_count"))
-                .join(g.nodes, F.col("dst") == g.nodes["id"])
-                .orderBy(F.desc("usage_count"), "name")
-                .limit(a["k"])
-                .select("name", "usage_count")
-                .collect()
-            )
-            ans = [{"name": r["name"], "usage_count": r["usage_count"]} for r in rows]
-        elif i == "paths":
-            ids = {r["name"]: r["id"] for r in g.nodes.filter(
-                F.col("name").isin([a["src"], a["dest"]])).collect()}
-            if a["src"] not in ids or a["dest"] not in ids:
-                return {"answer": [], "query": plan.query}
-            ans = self.find_paths(repo, ids[a["src"]], ids[a["dest"]])
-        elif i == "callers":
-            target = g.nodes.filter(F.col("name") == a["name"]).select("id")
-            rows = (
-                g.edges.filter(F.col("type") == "CALLS")
-                .join(target, g.edges["dst"] == target["id"]).drop(target["id"])
-                .join(g.nodes, F.col("src") == g.nodes["id"])
-                .collect()
-            )
-            ans = [_encode_node(r) for r in rows]
-        elif i == "callees":
-            src = g.nodes.filter(F.col("name") == a["name"]).select("id")
-            rows = (
-                g.edges.filter(F.col("type") == "CALLS")
-                .join(src, g.edges["src"] == src["id"]).drop(src["id"])
-                .join(g.nodes, F.col("dst") == g.nodes["id"])
-                .collect()
-            )
-            ans = [_encode_node(r) for r in rows]
-        elif i == "defined_in":
-            ent = g.nodes.filter(F.col("name") == a["name"]).select(F.col("id").alias("eid"))
-            rows = (
-                g.edges.filter(F.col("type") == "DEFINES")
-                .join(ent, F.col("dst") == F.col("eid"))
-                .join(g.nodes.filter(F.array_contains("labels", "File")),
-                      F.col("src") == g.nodes["id"])
-                .collect()
-            )
-            ans = [_encode_node(r) for r in rows]
-        elif i == "prefix_search":
-            ans = [_encode_node(r) for r in
-                   search.auto_complete(g.nodes, a["prefix"]).collect()]
-        elif i == "name_contains":
-            rows = (
-                lookups.by_label(g.nodes, a["label"])
-                .filter(F.col("name").contains(a["text"]))
-                .collect()
-            )
-            ans = [_encode_node(r) for r in rows]
-        elif i == "list_commits":
-            ans = self.list_commits(repo)
-        elif i == "list_label":
-            rows = lookups.by_label(g.nodes, a["label"]).limit(a["k"]).collect()
-            ans = [_encode_node(r) for r in rows]
-        elif i in ("extends", "implements"):
-            et = "EXTENDS" if i == "extends" else "IMPLEMENTS"
-            target = g.nodes.filter(F.col("name") == a["name"]).select(
-                F.col("id").alias("tid"))
-            rows = (
-                g.edges.filter(F.col("type") == et)
-                .join(target, F.col("dst") == F.col("tid")).drop("tid")
-                .join(g.nodes, F.col("src") == g.nodes["id"])
-                .collect()
-            )
-            ans = [_encode_node(r) for r in rows]
-        elif i == "least_covered":
-            rows = (
-                g.nodes.filter(F.array_contains("labels", "File"))
-                .filter(F.col("coverage").isNotNull())
-                .orderBy(F.col("coverage").asc(), "name")
-                .limit(a.get("k", 10))
-                .select("name", "coverage")
-                .collect()
-            )
-            ans = [{"name": r["name"], "coverage": r["coverage"]} for r in rows]
-        elif i == "entities_in_file":
-            fnode = g.nodes.filter(
-                F.array_contains("labels", "File") & (F.col("name") == a["file"])
-            ).select(F.col("id").alias("fid"))
-            ents = g.nodes.filter(
-                F.array_contains("labels", a.get("label", "Function")))
-            rows = (
-                g.edges.filter(F.col("type") == "DEFINES")
-                .join(fnode, F.col("src") == F.col("fid")).drop("fid")
-                .join(ents, F.col("dst") == ents["id"])
-                .collect()
-            )
-            ans = [_encode_node(r) for r in rows]
-        else:  # pragma: no cover - compiler and dispatcher enumerate together
-            return {"answer": None, "query": plan.query, "error": "unknown intent"}
-        return {"answer": ans, "query": plan.query}
+        graph = f"{repo}_git" if plan.intent in _ON_GIT_GRAPH else repo
+        return {"answer": CHAT_INTENTS[plan.intent](self._reads(graph), plan.args),
+                "query": plan.query}
 
     # -- ingest endpoints ---------------------------------------------------
 
@@ -510,6 +514,7 @@ class CodeGraphService:
         # layout — each parquet file covers a disjoint hash range, so the
         # pushed hash predicate prunes to one file.
         gg.save_range_indexed("name")
+        self._forget(gg.name)
         self._save_oplog(name, log)
         head = _git_head(repo_path)
         self._info.set(name, commit=head, repo_url=repo_path,

@@ -210,3 +210,27 @@ def test_chat_match_prefixed_natural_language_falls_back(chat_svc):
     assert out.get("error") is None
     assert isinstance(out["answer"], list) and len(out["answer"]) >= 3
     assert {r["name"] for r in out["answer"]} >= {"low", "mid", "top"}
+
+
+@pytest.mark.parametrize("cap", [0, 10**9], ids=["spark", "resident"])
+def test_chat_node_answers_are_the_nodes(chat_svc, cap):
+    """The intents that step from named nodes over an edge answer with the
+    far nodes exactly as `_encode_node` gives them: no edge columns from
+    the edge⋈node join, on either serving path."""
+    from unittest import mock
+
+    from code_graph_backend_spark.service import resident
+    from code_graph_backend_spark.service.api import _encode_node
+
+    want = {r["id"]: _encode_node(r) for r in chat_svc._graph("chatfix").nodes.collect()}
+    chat_svc._forget("chatfix")
+    try:
+        with mock.patch.object(resident, "ROW_CAP", cap):
+            for q in ("who calls 'low'?", "what does top call?", "where is mid defined?",
+                      "what extends Base?", "what implements Base?", "functions defined in main.py"):
+                ans = chat_svc.chat("chatfix", q)["answer"]
+                assert ans or "implements" in q, q
+                for n in ans:
+                    assert n == want[n["id"]], q
+    finally:
+        chat_svc._forget("chatfix")
