@@ -59,7 +59,10 @@ def entry(spark: SparkSession) -> DataFrame:
     return registry.QUERIES["curation_pipeline_v3"](spark, "/root/testdata/sf0.001")
 
 
-# Emitted by `tools/staleness.py --emit-priority` after CORRECTNESS_r12.json.
+# The order in which queries() yields the registry. A plain list, kept by
+# hand: grading reads only the head of queries(), so the queries most in
+# need of fresh evidence come first. tests/test_plans.py checks that it
+# names every registered query exactly once.
 _PRIORITY = [
     # expired, oldest green first (34)
     "m3_bulk_props", "m4_propagate_coverage", "j9_chain_successor",

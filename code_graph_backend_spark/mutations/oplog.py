@@ -1,11 +1,13 @@
-"""Op-log: the state-transition redo log behind git time travel
-(SURVEY.md §1.5, M7).
+"""Op-log: a state-transition redo log (SURVEY.md §1.5, M7).
 
 Reference design (api/graph.py:92-135, api/git_utils/git_graph.py:116-141,
 api/git_utils/git_utils.py:260-333): every mutating query whose result
 counters show a change is appended (query, params) to a backlog; backlog
 entries ride on PARENT/CHILD commit edges and are replayed verbatim to move
-the graph between commits, in either direction.
+the graph between commits, in either direction. The service's
+`switch_commit` does not replay: it analyses the target commit's tree
+afresh. The log serves the m7/m8 registry queries and the streaming apply
+(`streaming.stateful.streaming_oplog_apply`).
 
 Spark design: we log *logical ops* (op name + JSON params), not query text —
 rows `(commit_from, commit_to, seq, op, params_json)` in an append-only
@@ -201,11 +203,6 @@ class OpLog:
             [(e.commit_from, e.commit_to, e.seq, e.op, e.params_json) for e in self.entries],
             OPLOG_SCHEMA,
         )
-
-    @classmethod
-    def from_df(cls, df: DataFrame) -> "OpLog":
-        rows = df.orderBy("commit_from", "commit_to", "seq").collect()
-        return cls([OpLogEntry(*r) for r in rows])
 
 
 def _node_row(r: dict) -> tuple:

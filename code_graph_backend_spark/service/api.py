@@ -499,15 +499,14 @@ class CodeGraphService:
 
     def analyze_repo(self, repo_path: str, name: str | None = None) -> dict:
         """POST /analyze_repo (reference api/index.py:383-417): sources +
-        full commit graph (PARENT/CHILD edges + per-transition op-logs,
-        reference git_utils.py:73-258) + side-store HEAD. Accepts a
-        working-tree path, a `file://` URL, or a local bare repository
-        (cloned first — see _materialize_repo)."""
+        the commit graph (PARENT/CHILD edges, reference git_utils.py:73-258)
+        + side-store HEAD. Accepts a working-tree path, a `file://` URL, or
+        a local bare repository (cloned first — see _materialize_repo)."""
         from ..sources.git_history import build_commit_graph
 
         repo_path, name = self._materialize_repo(repo_path, name)
         result = self.analyze_folder(repo_path, name)
-        gg, log = build_commit_graph(self.spark, repo_path, name)
+        gg = build_commit_graph(self.spark, repo_path, name)
         gg.root = self.root
         gg.save()
         # X4: commit point-lookups (switch_commit) hit the hash-range
@@ -515,64 +514,56 @@ class CodeGraphService:
         # pushed hash predicate prunes to one file.
         gg.save_range_indexed("name")
         self._forget(gg.name)
-        self._save_oplog(name, log)
         head = _git_head(repo_path)
         self._info.set(name, commit=head, repo_url=repo_path,
                        analyzed_at=int(time.time()))
         return {**result, "head": head}
 
-    def _oplog_path(self, repo: str) -> str:
-        return f"{self.root}/{repo}_git/oplog"
-
-    def _save_oplog(self, repo: str, log) -> None:
-        df = log.to_df(self.spark)
-        df.coalesce(1).write.mode("overwrite").parquet(self._oplog_path(repo))
-
-    def _load_oplog(self, repo: str):
-        from ..mutations.oplog import OPLOG_SCHEMA, OpLog
-
-        # explicit schema: an empty op-log writes no parquet part files
-        return OpLog.from_df(
-            self.spark.read.schema(OPLOG_SCHEMA).parquet(self._oplog_path(repo))
-        )
-
-    def switch_commit(self, repo: str, target_commit: str,
-                      oplog=None, commit_path: list[str] | None = None) -> dict:
+    def switch_commit(self, repo: str, target_commit: str) -> dict:
         """POST /switch_commit (reference api/index.py:419-451 +
-        git_utils.py:260-333, M7 replay).
+        git_utils.py:260-333).
 
-        With no explicit oplog/path, both are DERIVED: the current commit
-        from the side store, the direction by comparing commit dates, the
-        hop sequence from the stored commit chain, and the op-log from the
-        `{repo}_git` storage — exactly the reference's flow."""
-        from ..sources.git_history import derive_commit_path
+        The graph becomes a fresh analysis of the target commit: its
+        tracked tree is exported from the recorded `repo_url` with `git
+        archive` (read-only on the repository) into a temporary directory
+        under the root and analysed by `analyze_folder`, as ingest is. A
+        switched graph therefore equals an ingest of that commit, whichever
+        commit it was switched from. A switch to the recorded commit does
+        nothing, and an unknown commit is rejected before any work."""
+        import io
+        import subprocess
+        import tarfile
+        import tempfile
 
-        if oplog is None or commit_path is None:
-            current = self._info.get(repo).get("commit")
-            if current is None:
-                raise ValueError(f"no recorded commit for {repo!r}")
-            if current == target_commit:
-                g = self._graph(repo)
-                n, e = g.counts()
-                return {"repo": repo, "commit": current, "nodes": n, "edges": e}
-            gg = self._graph(f"{repo}_git")
-            # X4 read path (reference git_graph.py:69-85 get_commit): point
-            # probe through the hash-range layout — the pushed equality
-            # prunes to one parquet file, so validation cost is O(1) in
-            # history length, not a full commit scan.
-            probe = gg.range_indexed_nodes("name").filter(
-                F.col("name") == target_commit)
-            if probe.limit(1).count() == 0:
-                raise ValueError(f"unknown commit {target_commit!r}")
-            commit_path = derive_commit_path(gg, current, target_commit)
-            oplog = self._load_oplog(repo)
-        g = PropertyGraph.load(self.spark, self.root, repo)
-        g = oplog.replay_path(g, commit_path)
-        g.save()
-        self._forget(repo)
+        info = self._info.get(repo)
+        current = info.get("commit")
+        if current is None:
+            raise ValueError(f"no recorded commit for {repo!r}")
+        if current == target_commit:
+            n, e = self._graph(repo).counts()
+            return {"repo": repo, "commit": current, "nodes": n, "edges": e}
+        # X4 read path (reference git_graph.py:69-85 get_commit): point
+        # probe through the hash-range layout — the pushed equality prunes
+        # to one parquet file, so validation cost is O(1) in history
+        # length, not a full commit scan.
+        probe = self._graph(f"{repo}_git").range_indexed_nodes("name").filter(
+            F.col("name") == target_commit)
+        if probe.limit(1).count() == 0:
+            raise ValueError(f"unknown commit {target_commit!r}")
+        archive = subprocess.run(
+            ["git", "-C", info["repo_url"], "archive", target_commit],
+            capture_output=True, check=True,
+        ).stdout
+        # the tree sits one level down, so no stored-graph listing of the
+        # root can mistake a top-level `nodes` directory of it for a graph
+        with tempfile.TemporaryDirectory(dir=self.root) as tmp:
+            tree = os.path.join(tmp, repo)
+            with tarfile.open(fileobj=io.BytesIO(archive)) as tar:
+                tar.extractall(tree, filter="data")
+            result = self.analyze_folder(tree, repo)
         self._info.set(repo, commit=target_commit)
-        n, e = g.counts()
-        return {"repo": repo, "commit": target_commit, "nodes": n, "edges": e}
+        return {"repo": repo, "commit": target_commit,
+                "nodes": result["nodes"], "edges": result["edges"]}
 
     def delete_repo(self, repo: str) -> dict:
         g = PropertyGraph.load(self.spark, self.root, repo)

@@ -1,8 +1,10 @@
 """SparkSession factory with scale-oriented defaults.
 
-The session is tuned for correctness-reproducibility (UTC timestamps, ANSI
-off to match DuckDB's permissive casts) and for scale (AQE on, skew-join
-handling, broadcast threshold). On a real cluster the same config applies;
+The session is tuned for correctness-reproducibility (UTC timestamps) and
+for scale (AQE on, skew-join handling, broadcast threshold). ANSI mode is
+left at Spark's default, which is on in Spark 4: a cast of a malformed
+string raises, so code that reads loosely typed strings (the `props` map)
+uses `try_cast`. On a real cluster the same config applies;
 only master/shuffle-partitions change.
 """
 

@@ -1,22 +1,18 @@
-"""End-to-end git time travel: build the commit graph WITH transition
-op-logs, and derive switch paths from commit dates.
+"""The commit graph of a repository, and switch paths derived from commit
+dates.
 
-Reference (api/git_utils/git_utils.py:73-258 build_commit_graph): walk
-history backward from HEAD — per hop, git-diff classify changes, delete
-removed files from the graph, re-analyze added/modified files, and drain
-the captured mutation backlog onto the PARENT edge; then walk forward
-symmetrically onto CHILD edges. switch_commit (git_utils.py:260-333) picks
-the replay direction by comparing commit DATES and replays the logged
-transitions hop by hop.
+Reference (api/git_utils/git_utils.py:73-258 build_commit_graph): the
+commits and their PARENT/CHILD edges become a `{repo}_git` graph beside
+the code graph. The reference also walks history hop by hop, re-analysing
+each hop's changed files against the checked-out tree and logging the
+mutations on the commit edges for switch_commit (git_utils.py:260-333) to
+replay. Here `CodeGraphService.switch_commit` analyses the target commit's
+whole tree instead, through the same `analyze_folder` as ingest, so no
+transition log is built or stored: name resolution is whole-graph, and a
+hop analysed apart from the rest of the tree resolves differently.
 
-Spark shape: the git subprocess steps (log/diff/show) are driver-side like
-the reference's pygit2 calls; each hop's changed-file set is request-sized
-(a commit diff), so per-hop re-analysis runs through the SAME distributed
-pipeline as full ingest (`parse_files` → `graph_from_parsed`) and its
-result rows are collected into the op-log as logical-op params. At fleet
-scale the unit of parallelism is the REPO (thousands of repos × mapInPandas
-over a repo list), not the commits of one repo — history replay is
-inherently sequential per repo, exactly as in the reference.
+`derive_commit_path` keeps the reference's date-ordered hop derivation
+for the `OpLog` replay of the m8 registry query.
 """
 
 from __future__ import annotations
@@ -25,95 +21,15 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..graph.model import PropertyGraph
-from ..mutations.oplog import OpLog
-from .git_ingest import _git, commit_edges_df, commits_df, file_at_commit
-
-SUPPORTED_EXTS = (".py", ".java", ".cs")
-
-
-def _classify(repo_path: str, a: str, b: str, exts, ignore) -> tuple[list, list, list]:
-    """git diff a→b → (added, deleted, modified) paths, ext/ignore filtered
-    (reference git_utils.py:35-70 classify_changes)."""
-    out = _git(repo_path, "diff", "--name-status", a, b)
-    added, deleted, modified = [], [], []
-    for line in out.splitlines():
-        parts = line.split("\t")
-        if len(parts) < 2:
-            continue
-        status, path = parts[0][0], parts[-1]
-        if not path.endswith(tuple(exts)):
-            continue
-        if any(pat in path for pat in ignore):
-            continue
-        if status == "A":
-            added.append(path)
-        elif status == "D":
-            deleted.append(path)
-        elif status in ("M", "R"):
-            modified.append(path)
-    return added, deleted, modified
-
-
-def _analyze_at(spark: SparkSession, repo_path: str, commit: str, paths: list[str]):
-    """Parse `paths` as of `commit` through the real distributed pipeline,
-    returning JSON-able node/edge row dicts for the op-log."""
-    from .python_analyzer import graph_from_parsed, parse_files
-
-    rows = []
-    for p in paths:
-        try:
-            rows.append((p, file_at_commit(repo_path, commit, p)))
-        except Exception:
-            continue  # path absent at that commit (e.g. rename source)
-    if not rows:
-        return [], []
-    files = spark.createDataFrame(rows, "path string, content binary")
-    nodes, edges = graph_from_parsed(spark, parse_files(files))
-    node_rows = [r.asDict(recursive=True) for r in nodes.collect()]
-    edge_rows = [r.asDict(recursive=True) for r in edges.collect()]
-    return node_rows, edge_rows
-
-
-def _record_hop(log: OpLog, spark, repo_path, src_hash, dst_hash,
-                added, deleted, modified) -> None:
-    """One transition src→dst: delete (deleted+modified), re-analyze
-    (added+modified) at dst — reference git_utils.py:151-157/215-221."""
-    if deleted or modified:
-        log.record(src_hash, dst_hash, "delete_files",
-                   {"paths": sorted(deleted + modified)})
-    reanalyze = sorted(added + modified)
-    if reanalyze:
-        node_rows, edge_rows = _analyze_at(spark, repo_path, dst_hash, reanalyze)
-        if node_rows:
-            log.record(src_hash, dst_hash, "merge_nodes", {"rows": node_rows})
-        if edge_rows:
-            log.record(src_hash, dst_hash, "merge_edges", {"rows": edge_rows})
+from .git_ingest import commit_edges_df, commits_df
 
 
 def build_commit_graph(
-    spark: SparkSession,
-    repo_path: str,
-    name: str,
-    exts=SUPPORTED_EXTS,
-    ignore: tuple[str, ...] = (),
-) -> tuple[PropertyGraph, OpLog]:
-    """Commit graph (nodes + PARENT/CHILD edges) and the transition op-log,
-    both directions (reference git_utils.py:73-258)."""
+    spark: SparkSession, repo_path: str, name: str
+) -> PropertyGraph:
+    """The commit graph `{name}_git`: one Commit node per commit and the
+    PARENT/CHILD edges between them (reference git_utils.py:73-258)."""
     cdf = commits_df(spark, repo_path)
-    commits = cdf.collect()  # `git log --reverse`: oldest → newest; the
-    # per-repo commit list is bounded (a driver resource like the clone)
-    hashes = [r["hash"] for r in commits]
-
-    log = OpLog()
-    # backward: HEAD → root, transitions keyed (child, parent) [PARENT edges]
-    for child, parent in zip(reversed(hashes), list(reversed(hashes))[1:]):
-        added, deleted, modified = _classify(repo_path, child, parent, exts, ignore)
-        _record_hop(log, spark, repo_path, child, parent, added, deleted, modified)
-    # forward: root → HEAD, transitions keyed (parent, child) [CHILD edges]
-    for parent, child in zip(hashes, hashes[1:]):
-        added, deleted, modified = _classify(repo_path, parent, child, exts, ignore)
-        _record_hop(log, spark, repo_path, parent, child, added, deleted, modified)
-
     # commit nodes: props carry date + seq (log order) so path derivation
     # can break same-second date ties deterministically
     commit_nodes = cdf.select(
@@ -142,8 +58,7 @@ def build_commit_graph(
         "type",
         F.lit(None).cast("map<string,string>").alias("props"),
     )
-    gg = PropertyGraph(spark, f"{name}_git", commit_nodes, commit_edges)
-    return gg, log
+    return PropertyGraph(spark, f"{name}_git", commit_nodes, commit_edges)
 
 
 def derive_commit_path(
@@ -151,20 +66,23 @@ def derive_commit_path(
 ) -> list[str]:
     """Ordered hash path current → target, direction chosen by commit DATE
     (reference git_utils.py:309-320: backward iff current.date > target.date;
-    the chain itself is date-ordered, git_graph.py:64)."""
+    the chain itself is date-ordered, git_graph.py:64). Commits sort as
+    `list_commits` gives them: a date that is not a number reads as NULL
+    and sorts first; ties break on `seq`, then on the hash."""
     rows = (
         git_graph.nodes.filter(F.array_contains("labels", "Commit"))
         .select(
             "name",
-            F.col("props").getItem("date").cast("long").alias("date"),
-            F.coalesce(F.col("props").getItem("seq").cast("long"), F.lit(0)).alias("seq"),
+            F.col("props").getItem("date").try_cast("long").alias("date"),
+            F.coalesce(F.col("props").getItem("seq").try_cast("long"), F.lit(0)).alias("seq"),
         )
         .collect()
     )
-    by_hash = {r["name"]: (r["date"], r["seq"]) for r in rows}
+    by_hash = {r["name"]: (r["date"] is not None, r["date"] or 0, r["seq"], r["name"])
+               for r in rows}
     if current not in by_hash or target not in by_hash:
         raise ValueError("Commits not found")
-    ordered = sorted(by_hash, key=lambda h: by_hash[h])
+    ordered = sorted(by_hash, key=by_hash.get)
     ci, ti = ordered.index(current), ordered.index(target)
     if ci == ti:
         return [current]

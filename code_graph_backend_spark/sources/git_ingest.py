@@ -1,16 +1,14 @@
-"""S4/S5: git history → commit graph + per-commit deltas.
+"""S4: git history → commit chain and PARENT/CHILD edges.
 
 Reference (api/git_utils/git_utils.py): pygit2 walks commits backward from
-HEAD (S4), classifies per-commit-pair deltas into added/deleted/modified
-(S5), and replays file-level re-analysis per hop to build the transition
-op-log (§1.5).
+HEAD (S4) to build the commit graph.
 
-Spark design: `git log`/`git diff-tree` run driver-side (the repo clone is a
-driver resource, like the reference's subprocess steps) and land in
-DataFrames immediately; everything downstream — the commit chain table, the
-PARENT/CHILD edges, delta classification filters — is DataFrame work. At
-fleet scale (thousands of repos) the subprocess step shards per-repo across
-executors via mapInPandas over a repo list; the per-repo logic is identical.
+Spark design: `git log` runs in the Python process that holds the clone,
+as the reference's subprocess steps do, and lands in DataFrames
+immediately; everything downstream — the commit chain table and the
+PARENT/CHILD edges — is DataFrame work. At fleet scale (thousands of
+repos) the subprocess step shards per-repo across executors via
+mapInPandas over a repo list; the per-repo logic is identical.
 """
 
 from __future__ import annotations
@@ -53,25 +51,3 @@ def commit_edges_df(spark: SparkSession, repo: str) -> DataFrame:
             rows.append((child, p, "PARENT"))
             rows.append((p, child, "CHILD"))
     return spark.createDataFrame(rows, "src_hash string, dst_hash string, type string")
-
-
-def diff_df(spark: SparkSession, repo: str, a: str, b: str) -> DataFrame:
-    """S5: per commit-pair deltas (status ∈ A/D/M, path) — reference
-    git_utils.py:35-70. Downstream filters (ext/ignore) are plain
-    DataFrame predicates (P8)."""
-    out = _git(repo, "diff", "--name-status", a, b)
-    rows = []
-    for line in out.splitlines():
-        parts = line.split("\t")
-        if len(parts) >= 2:
-            rows.append((parts[0][0], parts[-1]))
-    if not rows:
-        return spark.createDataFrame([], "status string, path string")
-    return spark.createDataFrame(rows, "status string, path string")
-
-
-def file_at_commit(repo: str, commit: str, path: str) -> bytes:
-    return subprocess.run(
-        ["git", "-C", repo, "show", f"{commit}:{path}"],
-        capture_output=True, check=True,
-    ).stdout

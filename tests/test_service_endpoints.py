@@ -103,25 +103,43 @@ def test_chat_templates(svc):
     assert isinstance(unreachable, list)
 
 
-def test_switch_commit_forward_and_back(svc, spark):
+def test_switch_commit_forward_and_back(svc, tmp_path):
     """POST /switch_commit both directions (reference api/index.py:419-451 +
-    git_utils.py:260-333): redo-log forward, logged inverse ops backward."""
-    from code_graph_backend_spark.mutations.oplog import OpLog
+    git_utils.py:260-333): the read endpoints serve each commit's state
+    right after the switch."""
+    repo = tmp_path / "travel"
+    repo.mkdir()
+    (repo / "main.py").write_text(SRC)
+    git = ["git", "-c", "user.email=t@t", "-c", "user.name=t"]
+    subprocess.run(["git", "init", "-q"], cwd=repo, check=True)
+    subprocess.run(["git", "add", "."], cwd=repo, check=True)
+    subprocess.run([*git, "commit", "-qm", "c0"], cwd=repo, check=True)
+    c0 = subprocess.run(["git", "rev-parse", "HEAD"], cwd=repo, check=True,
+                        capture_output=True, text=True).stdout.strip()
+    (repo / "extra.py").write_text("from main import low\n\ndef added():\n    return low(2)\n")
+    subprocess.run(["git", "add", "."], cwd=repo, check=True)
+    subprocess.run([*git, "commit", "-qm", "c1"], cwd=repo, check=True)
+    c1 = svc.analyze_repo(str(repo), "travel")["head"]
 
-    before = svc.repo_info("fixture")
-    log = OpLog()
-    log.record("c0", "c1", "merge_nodes", {"rows": [
-        {"id": 999_001, "labels": ["Function", "Searchable"],
-         "name": "added_in_c1", "path": "new.py"}]})
-    log.record("c1", "c0", "delete_cascade", {"ids": [999_001], "edge_type": "DEFINES"})
+    def served():
+        names = {n["name"] for n in svc.graph_entities("travel")["nodes"]}
+        return names, [n["name"] for n in svc.auto_complete("travel", "add")]
 
-    fwd = svc.switch_commit("fixture", "c1", log, ["c0", "c1"])
-    assert fwd["nodes"] == before["node_count"] + 1
-    assert svc.repo_info("fixture")["commit"] == "c1"
-
-    back = svc.switch_commit("fixture", "c0", log, ["c1", "c0"])
-    assert back["nodes"] == before["node_count"]
-    assert svc.repo_info("fixture")["commit"] == "c0"
+    at_c1 = served()
+    assert "added" in at_c1[0] and at_c1[1] == ["added"]
+    back = svc.switch_commit("travel", c0)
+    assert back["commit"] == c0 == svc.repo_info("travel")["commit"]
+    names, completed = served()
+    assert "added" not in names and "low" in names and completed == []
+    assert svc.repo_info("travel")["node_count"] == back["nodes"]
+    # forward through a second service on its own session, as another
+    # server process sharing the root would switch: its writes cannot drop
+    # svc's cached handles, so svc must see the new stored version
+    other = CodeGraphService(svc.spark.newSession(), svc.root)
+    fwd = other.switch_commit("travel", c1)
+    assert served() == at_c1
+    assert svc.repo_info("travel")["node_count"] == fwd["nodes"] > back["nodes"]
+    svc.delete_repo("travel")
 
 
 def test_reads_share_one_graph_handle_per_stored_version(svc, tmp_path):
