@@ -561,12 +561,41 @@ def test_no_row_at_a_time_python_udf(spark, qs):
     )
 
 
-def test_priority_is_a_permutation_of_the_frozen_registry():
-    """`_PRIORITY` orders every registered query exactly once, and the
-    registry stays frozen at 234 queries."""
-    from code_graph_backend_spark import registry
+def test_shuffle_count_never_regresses():
+    """Fleet-wide shuffle-budget gate (r10): every registered query's
+    static shuffle-exchange count (hash/range/single-partition Exchange
+    in the pre-execution physical plan; BroadcastExchange excluded) must
+    EQUAL the committed cold-session census
+    (tests/plan_shuffle_baseline.json, generated by
+    `python tools/plan_sweep.py --exchanges`, deterministic across fresh
+    sessions — verified by back-to-back runs). The census re-runs in its
+    own subprocess because the count is only deterministic COLD: in the
+    shared suite session an earlier test's persisted table can flip a
+    size-estimated BroadcastHashJoin into a SortMergeJoin and add
+    exchanges that say nothing about the plan as written. Equality, not
+    <=, so silent improvements also force a baseline refresh (keeping
+    the census honest). After a deliberate plan change, regenerate the
+    baseline and justify the movers in the commit."""
+    import json
+    import os
+    import subprocess
+    import sys
 
-    names = entry._PRIORITY
-    assert len(names) == len(set(names))
-    assert sorted(names) == sorted(registry.queries())
-    assert len(names) == 234
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, os.path.join(repo, "tools", "plan_sweep.py"),
+         "--exchanges"],
+        capture_output=True, text=True, cwd=repo, timeout=1200,
+        env={**os.environ, "SPARK_GRAFT_SF_DIR": SF},
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    got = json.loads(out.stdout)
+    with open(os.path.join(repo, "tests", "plan_shuffle_baseline.json")) as f:
+        baseline = json.load(f)
+    assert set(baseline) == set(got), (
+        "baseline rot — regenerate tools/plan_sweep.py --exchanges: "
+        f"only-in-baseline={sorted(set(baseline) - set(got))[:5]} "
+        f"new={sorted(set(got) - set(baseline))[:5]}"
+    )
+    moved = {k: (baseline[k], got[k]) for k in got if got[k] != baseline[k]}
+    assert not moved, f"shuffle-count moved (baseline, got): {moved}"

