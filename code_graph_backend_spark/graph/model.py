@@ -71,21 +71,38 @@ EDGES_SCHEMA = StructType(
 # (reference api/graph.py:250-251).
 NODE_KEY = ("name", "path", "src_start", "src_end")
 
+# Row bound of the driver-local tier. A graph of at most this many rows
+# (nodes plus edges) is served from a driver copy (service/resident.py),
+# and a parse of at most this many rows is resolved into a graph on the
+# driver (sources/local_resolver.py); above it both stay on Spark.
+ROW_CAP = 1_000_000
+
 
 def node_id_expr(label_col="labels", name="name", path="path", s="src_start", e="src_end"):
     """Deterministic node id: xxhash64 over the MERGE business key.
 
     The primary label participates so that a Class and Function with the same
     name/span do not collide (mirrors label-scoped MERGE in the reference).
+    A string names a column (`label_col` the labels array); a Column is
+    used as it is.
     """
+    col = lambda c: F.col(c) if isinstance(c, str) else c  # noqa: E731
     lbl = F.element_at(F.col(label_col), 1) if isinstance(label_col, str) else label_col
     return F.xxhash64(
         lbl,
-        F.coalesce(F.col(name), F.lit("")),
-        F.coalesce(F.col(path), F.lit("")),
-        F.coalesce(F.col(s).cast("string"), F.lit("")),
-        F.coalesce(F.col(e).cast("string"), F.lit("")),
+        F.coalesce(col(name), F.lit("")),
+        F.coalesce(col(path), F.lit("")),
+        F.coalesce(col(s).cast("string"), F.lit("")),
+        F.coalesce(col(e).cast("string"), F.lit("")),
     )
+
+
+def local_row_count(df: DataFrame) -> int | None:
+    """Rows of a frame made from driver data (`createDataFrame` plans it
+    as a LocalRelation), read from its plan with no Spark job; None for
+    any other frame."""
+    plan = df._jdf.queryExecution().logical()
+    return plan.data().size() if plan.nodeName() == "LocalRelation" else None
 
 
 class PropertyGraph:

@@ -148,13 +148,9 @@ def s2_cfamily_analyzer(spark, sf_dir):
         F.col("id").alias("_id"),
     )
     types = ["DEFINES", "CALLS", "EXTENDS", "IMPLEMENTS", "RETURNS", "PARAMETERS"]
-    # one pivot aggregate (single shuffle) instead of six join-aggregates
-    cnt = (
-        edges.filter(F.col("type").isin(types))
-        .groupBy("src")
-        .pivot("type", types)
-        .agg(F.count(F.lit(1)))
-        .select("src", *[F.col(t).alias(f"{t.lower()}_out") for t in types])
+    # one conditional-count aggregate (a single shuffle; a pivot plans two)
+    cnt = edges.groupBy("src").agg(
+        *[F.count(F.when(F.col("type") == t, 1)).alias(f"{t.lower()}_out") for t in types]
     )
     out = out.join(cnt, out["_id"] == cnt["src"], "left_outer").drop("src")
     return out.select(

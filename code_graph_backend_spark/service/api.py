@@ -13,7 +13,7 @@ service/resident.py) and launches no Spark job; above the cap `SparkReads`
 serves the same calls with the Spark operators. Both give the same
 answers. Raw Cypher through `chat` always runs on Spark, as do the
 registry queries. The repo side store (`RepoInfoStore`) is read from
-parquet once per file version.
+parquet with pyarrow once per file version.
 
 Result encoding mirrors api/entities/entity_encoder.py:3-24: nodes/edges as
 dicts, `Searchable` stripped from labels.
@@ -24,12 +24,15 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import time
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
-from ..graph.model import PropertyGraph
+from ..graph.model import PropertyGraph, local_row_count
 from ..memo import cached, invalidate
 from ..operators import lookups, neighbors, search, traversal
 from ..operators.aggregates import counts
@@ -41,16 +44,17 @@ class RepoInfoStore:
     the Spark twin of the reference's Redis `{repo}_info` hash
     (api/info.py:9-88): a tiny single-file parquet table under the storage
     root (SURVEY §1.6), surviving process restarts. Rows are per-repo and
-    request-sized; writes go through temp+rename so a crash never corrupts
-    the table. The decoded table is kept in process and re-read only when
-    the file's (inode, mtime) changes, the version `_graph` keys on too,
-    so a read launches no Spark job while another writer leaves the file
-    alone."""
+    request-sized, so the table is read and written with pyarrow on the
+    driver and no access launches a Spark job. A write puts one part file
+    in a temporary directory and renames it into place, so a crash never
+    corrupts the table; the directory layout is the one Spark's writer
+    leaves, and a table Spark wrote still reads. The decoded table is kept
+    in process and re-read only when the directory's (inode, mtime)
+    changes, the version `_graph` keys on too."""
 
-    _SCHEMA = "repo string, info string"  # info = JSON dict
+    _SCHEMA = pa.schema([("repo", pa.string()), ("info", pa.string())])  # info = JSON dict
 
-    def __init__(self, spark: SparkSession, root: str):
-        self.spark = spark
+    def __init__(self, root: str):
         self.path = os.path.join(root, "_repo_info.parquet")
         self._version: tuple | None = None
         self._data: dict[str, dict] = {}
@@ -67,20 +71,21 @@ class RepoInfoStore:
         if version is None:
             return {}
         if version != self._version:
-            df = self.spark.read.schema(self._SCHEMA).parquet(self.path)
-            self._data = {r["repo"]: json.loads(r["info"]) for r in df.collect()}
+            t = pq.read_table(self.path, schema=self._SCHEMA).to_pydict()
+            self._data = {r: json.loads(i) for r, i in zip(t["repo"], t["info"])}
             self._version = version
         return self._data
 
     def _write_all(self, data: dict[str, dict]) -> None:
-        rows = [(k, json.dumps(v, sort_keys=True)) for k, v in sorted(data.items())]
-        df = self.spark.createDataFrame(rows, self._SCHEMA)
+        repos = sorted(data)
+        table = pa.table({"repo": repos,
+                          "info": [json.dumps(data[r], sort_keys=True) for r in repos]},
+                         schema=self._SCHEMA)
         tmp = self.path + "__tmp"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        import shutil
-
-        if os.path.exists(self.path):
-            shutil.rmtree(self.path)
+        shutil.rmtree(tmp, ignore_errors=True)
+        os.makedirs(tmp)
+        pq.write_table(table, os.path.join(tmp, "part-00000.parquet"))
+        shutil.rmtree(self.path, ignore_errors=True)
         os.rename(tmp, self.path)
         self._version, self._data = self._stat(), data
 
@@ -278,7 +283,7 @@ class CodeGraphService:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self._info = RepoInfoStore(spark, root)  # persistent side-store
+        self._info = RepoInfoStore(root)  # persistent side-store
 
     def _version(self, name: str) -> tuple | None:
         """The (inode, mtime) of the stored graph's nodes and edges
@@ -450,15 +455,19 @@ class CodeGraphService:
         )
         parsed = parse_files(files)
         nodes, edges = graph_from_parsed(self.spark, parsed)
+        # a graph resolved on the driver knows its size; one from the
+        # Spark plan is counted once stored
+        n, e = local_row_count(nodes), local_row_count(edges)
         g = PropertyGraph(self.spark, name, nodes, edges, root=self.root)
         try:
             g.save()
         finally:
-            # graph_from_parsed cached the parse; a later scan of this path
+            # the Spark plan cached the parse; a later scan of this path
             # has the same plan, so Spark would serve this parse again
             parsed.unpersist()
         self._forget(name)
-        n, e = g.counts()
+        if n is None or e is None:
+            n, e = g.counts()
         return {"repo": name, "nodes": n, "edges": e}
 
     def _materialize_repo(self, url_or_path: str, name: str | None) -> tuple[str, str]:
@@ -469,7 +478,6 @@ class CodeGraphService:
         plain working-tree path passes through unchanged. Network URLs
         (https/ssh) would take the same clone path — this sandbox has no
         network, which is the one documented divergence."""
-        import shutil
         import subprocess
 
         src = url_or_path

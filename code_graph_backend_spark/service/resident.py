@@ -27,10 +27,10 @@ from collections.abc import Callable, Iterable, Iterator
 import numpy as np
 from pyspark.sql import Row
 
-from ..graph.model import PropertyGraph
+from ..graph.model import ROW_CAP, PropertyGraph
 from ..operators.traversal import simple_paths
 
-# Row cap (nodes + edges) for a resident copy. Measured on a 4-core host
+# `ROW_CAP` (graph/model.py) bounds a resident copy. Measured on a 4-core host
 # (build = two counts, one nodes collect, one edges Arrow transfer; held
 # bytes from tracemalloc, steady runs of three). This package's own graph,
 # 1,363 nodes + 15,841 edges, builds in 0.6-0.7 s and holds 2.3 MB
@@ -41,7 +41,6 @@ from ..operators.traversal import simple_paths
 # 2.0 MB (117 B/row) and 98 MB (98 B/row). The build is paid once per
 # stored version; the Spark path costs 0.1-0.8 s per request on the
 # smallest of these.
-ROW_CAP = 1_000_000
 
 # What Spark's `try_cast(string as long)` accepts: an optional sign and
 # ASCII digits inside surrounding whitespace.

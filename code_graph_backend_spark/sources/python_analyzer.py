@@ -10,12 +10,19 @@ Spark design:
   module (stdlib, per-executor, no service) parses and emits FLAT rows —
   entities and symbol references share one discriminated schema so one
   parse produces everything.
-- second pass = name-resolution JOIN (J13): references ⋈ definitions on
-  name. The reference's LSP is def-site-precise; a name join is the
+- second pass = name resolution (J13): references matched to definitions
+  by name. The reference's LSP is def-site-precise; a name join is the
   scalable batch equivalent (divergence documented in SURVEY §3.1).
   Unresolved names (builtins like `print`) become external nodes, matching
   the reference's behavior of creating callable nodes for builtins
   (tests/test_py_analyzer.py:55-59).
+- where the second pass runs depends on size, split at
+  `graph.model.ROW_CAP`, the bound the resident serving tier uses too.
+  A parse of at most that many rows is collected in one job with its ids
+  and resolved on the driver (sources/local_resolver.py), as the
+  reference resolves in process; a larger one is resolved by a Spark
+  plan of joins and windows (`_spark_graph`). Both give the same graph,
+  row for row (tests/test_ingest_paths.py).
 
 Line numbers are 0-based like tree-sitter rows (FIXTURES.md).
 """
@@ -36,12 +43,15 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..graph.model import node_id_expr
+from ..graph.model import EDGES_SCHEMA, NODES_SCHEMA, ROW_CAP, node_id_expr
 
 # __init__ re-export chains are followed through this many facade hops
-# (an unrolled bounded fixpoint — see graph_from_parsed); resolved rows
+# (an unrolled bounded fixpoint — see _spark_graph); resolved rows
 # pass through surplus hops unchanged, so the cap only bounds DEPTH.
 _REEXPORT_HOPS = 5
+
+# parse row kinds that name a symbol to resolve
+_REF_KINDS = ("call", "extends", "returns", "params", "implements", "cs_base")
 
 PARSE_SCHEMA = StructType(
     [
@@ -262,7 +272,25 @@ def parse_files(files: DataFrame) -> DataFrame:
 
 
 def graph_from_parsed(spark: SparkSession, parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Second pass: rows → (nodes, edges), resolution by name join."""
+    """Second pass: rows → (nodes, edges).
+
+    A parse of at most `ROW_CAP` rows is collected in one job and resolved
+    on the driver (sources/local_resolver.py); the frames handed back are
+    driver data, so no job runs until they are read. A larger parse is
+    resolved by the Spark plan below, which caches `parsed`: the caller
+    unpersists it once the graph is written."""
+    from . import local_resolver
+
+    rows = local_resolver.collect_parse(parsed, ROW_CAP)
+    if rows is None:
+        return _spark_graph(parsed)
+    nodes, edges = local_resolver.resolve(rows)
+    return (local_resolver.to_frame(spark, nodes, NODES_SCHEMA),
+            local_resolver.to_frame(spark, edges, EDGES_SCHEMA))
+
+
+def _spark_graph(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The distributed second pass: resolution by name join."""
     parsed = parsed.cache()
     ent = parsed.filter(F.col("kind") == "entity")
 
@@ -275,7 +303,6 @@ def graph_from_parsed(spark: SparkSession, parsed: DataFrame) -> tuple[DataFrame
         F.col("target").alias("iorig"), F.col("text").alias("isuffix"),
         F.col("line").alias("iline"),
     ).distinct()
-    _REF_KINDS = ("call", "extends", "returns", "params", "implements", "cs_base")
 
     # A file may bind the same name more than once (sequential rebinding
     # `from a import f ... from b import f`, conditional try/except
@@ -407,19 +434,21 @@ def graph_from_parsed(spark: SparkSession, parsed: DataFrame) -> tuple[DataFrame
             )
         )
 
-    # Lineage cut: refs_eff carries the 5-level re-export hop unroll (five
-    # broadcast left-outer joins over two window dedups) and feeds FOUR
-    # downstream consumers (external nodes + three edge-kind joins) — with
-    # lineage intact Catalyst re-ANALYZES that whole subtree per consumer,
-    # and for repo-sized inputs the optimizer time dwarfs execution (the
-    # 20-row fixture graph spent ~5s in plan analysis, ~0.1s executing).
-    # This is the engine's ingest materialization boundary — the reference
+    # Lineage cut (this plan only runs above ROW_CAP): refs_eff carries
+    # the 5-level re-export hop unroll (five broadcast left-outer joins
+    # over two window dedups) and feeds FOUR downstream consumers
+    # (external nodes + three edge-kind joins) — with lineage intact
+    # Catalyst re-ANALYZES that whole subtree per consumer, and for
+    # repo-sized inputs the optimizer time dwarfs execution. This is the
+    # engine's ingest materialization boundary — the reference
     # materializes the resolved graph into FalkorDB at exactly this point
     # (api/analyzers/source_analyzer.py:118 second_pass writes edges as it
     # resolves) — so truncating lineage here is the Spark-native analogue,
     # not a cache-for-speed hack. ids are deterministic (xxhash64 business
-    # key, graph/model.py:75), so re-derivation vs checkpoint replay is
-    # value-identical either way.
+    # key, graph/model.py), so re-derivation vs checkpoint replay is
+    # value-identical either way. Even with eager=False the checkpoint
+    # launches jobs while the plan is built: the AQE stages beneath it
+    # run then.
     refs_eff = refs_eff.localCheckpoint(eager=False)
 
     # entity nodes (labels + Searchable, reference api/graph.py:250,400)
@@ -465,9 +494,9 @@ def graph_from_parsed(spark: SparkSession, parsed: DataFrame) -> tuple[DataFrame
     )
 
     all_nodes = ent_nodes.unionByName(file_nodes).unionByName(ext_nodes)
-    # second lineage cut: the node table fans out into every edge-kind
-    # resolution join below (ids is read 5+ times) — same analysis-time
-    # rationale as refs_eff above
+    # second lineage cut (above ROW_CAP too): the node table fans out
+    # into every edge-kind resolution join below (ids is read 5+ times) —
+    # same analysis-time rationale as refs_eff above
     nodes = all_nodes.select(
         node_id_expr().alias("id"),
         "labels", "name", "path", "ext", "src_start", "src_end", "doc",

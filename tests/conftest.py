@@ -4,6 +4,7 @@ import sys
 from pathlib import Path
 
 import pytest
+from analyzer_files import FIXTURE_PY
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
@@ -21,25 +22,8 @@ def spark():
 def fixture_graph(spark, tmp_path):
     """The golden mini-graph from FIXTURES.md §1 (tests/source_files/py/src.py
     of the reference), ingested through the real analyzer pipeline."""
-    src = '''\
-import logging
-
-def log(msg: str) -> None:
-    print(msg)
-
-class Task:
-    """A unit of work."""
-    def __init__(self, name: str, prio: int):
-        self.name = name
-        self.prio = prio
-        print(name)
-
-    def abort(self, delay: float) -> Task:
-        log("abort")
-        return self
-'''
     p = tmp_path / "src.py"
-    p.write_text(src)
+    p.write_text(FIXTURE_PY)
     from code_graph_backend_spark.sources.python_analyzer import analyze_python_files
     from code_graph_backend_spark.sources.source_scan import scan_source_tree
 

@@ -6,94 +6,13 @@ Spark pipeline, plus Java-specific EXTENDS/IMPLEMENTS/Enum coverage."""
 from __future__ import annotations
 
 import pytest
+from analyzer_files import CFAMILY_FILE_SETS
 from pyspark.sql import functions as F
 
 from code_graph_backend_spark.sources.python_analyzer import (
     PARSE_SCHEMA,
     graph_from_parsed,
 )
-
-CSHARP_SRC = """\
-using System;
-
-namespace TestProject
-{
-    public interface ILogger
-    {
-        void Log(string message);
-    }
-
-    public class ConsoleLogger : ILogger
-    {
-        public void Log(string message)
-        {
-            Console.WriteLine(message);
-        }
-    }
-
-    /// <summary>
-    /// Represents a task to be executed.
-    /// </summary>
-    public class Task
-    {
-        public string Name { get; set; }
-        private ILogger _logger;
-
-        public Task(string name, ILogger logger)
-        {
-            Name = name;
-            _logger = logger;
-            _logger.Log("Task created: " + name);
-        }
-
-        public bool Execute()
-        {
-            _logger.Log("Executing: " + Name);
-            return true;
-        }
-
-        public void Abort(float delay)
-        {
-            _logger.Log("Aborting: " + Name);
-            Execute();
-        }
-    }
-}
-"""
-
-JAVA_SRC = """\
-/** Greets people. */
-public class Greeter extends Base implements Hello, Goodbye {
-    private String name;
-
-    /** ctor doc */
-    public Greeter(String name) {
-        this.name = name;
-        register(name);
-    }
-
-    public String greet(int times) {
-        register(name);
-        return name;
-    }
-}
-
-interface Hello extends Salutation {
-    void sayHello(String who);
-}
-
-interface Goodbye {
-    void sayGoodbye(String who);
-}
-
-class Base {
-    public void register(String name) {
-    }
-}
-
-enum Color { RED, GREEN }
-"""
-
 
 def _ingest(spark, files: dict[str, str]):
     from code_graph_backend_spark.sources.python_analyzer import parse_files
@@ -107,13 +26,13 @@ def _ingest(spark, files: dict[str, str]):
 
 @pytest.fixture(scope="module")
 def cs_graph(spark):
-    nodes, edges = _ingest(spark, {"Program.cs": CSHARP_SRC})
+    nodes, edges = _ingest(spark, CFAMILY_FILE_SETS["csharp"])
     return nodes.cache(), edges.cache()
 
 
 @pytest.fixture(scope="module")
 def java_graph(spark):
-    nodes, edges = _ingest(spark, {"Greeter.java": JAVA_SRC})
+    nodes, edges = _ingest(spark, CFAMILY_FILE_SETS["java"])
     return nodes.cache(), edges.cache()
 
 
@@ -203,8 +122,7 @@ def test_java_inventory_and_edges(java_graph):
 def test_java_interface_extends_resolved(spark):
     """interface A extends B where B IS defined → EXTENDS edge (not
     IMPLEMENTS), proving typed resolution keeps Java semantics."""
-    src = "interface B {}\ninterface A extends B {}\n"
-    nodes, edges = _ingest(spark, {"I.java": src})
+    nodes, edges = _ingest(spark, CFAMILY_FILE_SETS["java_interface_extends"])
     ids = {r["name"]: r["id"] for r in nodes.filter(F.col("path") != "").collect()}
     rows = {(r["src"], r["type"], r["dst"]) for r in edges.collect()}
     assert (ids["A"], "EXTENDS", ids["B"]) in rows
@@ -214,13 +132,7 @@ def test_java_interface_extends_resolved(spark):
 def test_mixed_corpus_python_unaffected(spark, fixture_graph):
     """Ingesting a Python file alongside Java must keep the Python-side
     behavior (external builtin nodes) intact."""
-    nodes, edges = _ingest(
-        spark,
-        {
-            "src.py": "def log(msg):\n    print(msg)\n",
-            "Base.java": "class Base { public void register(String n) { } }",
-        },
-    )
+    nodes, edges = _ingest(spark, CFAMILY_FILE_SETS["mixed_corpus"])
     # print → external Function node (python semantics preserved)
     ext = nodes.filter((F.col("name") == "print") & (F.col("path") == ""))
     assert ext.count() == 1
@@ -231,29 +143,7 @@ def test_mixed_corpus_python_unaffected(spark, fixture_graph):
 def test_java_generics_and_annotations(spark):
     """The verdict-flagged precision gaps: nested-generic return types,
     generic type-parameter bounds, and annotation-heavy declarations."""
-    src = """\
-import java.util.*;
-
-class Box<T extends Number> {
-    private T item;
-
-    @SuppressWarnings({"unchecked"})
-    public Map<String, List<Integer>> index(List<T> items) {
-        return build(items);
-    }
-
-    public <R> R identity(R x) {
-        return x;
-    }
-}
-
-class Sub<T> extends Box<T> implements Comparable<T> {
-    public int compareTo(Sub<T> other) {
-        return 0;
-    }
-}
-"""
-    nodes, edges = _ingest(spark, {"Box.java": src})
+    nodes, edges = _ingest(spark, CFAMILY_FILE_SETS["java_generics"])
     named = nodes.filter(F.col("path") != "")
     methods = {r["name"] for r in named.filter(
         F.array_contains("labels", "Method")).collect()}
@@ -271,15 +161,7 @@ class Sub<T> extends Box<T> implements Comparable<T> {
 def test_csharp_where_constraints(spark):
     """C# `where` clauses must not leak constraint targets into the base
     list (a `U : IBar` fragment is not an IMPLEMENTS edge)."""
-    src = """\
-interface IFoo { }
-
-class Pair<T, U> : IFoo where T : IFoo, U : IFoo
-{
-    public void Swap() { }
-}
-"""
-    nodes, edges = _ingest(spark, {"Pair.cs": src})
+    nodes, edges = _ingest(spark, CFAMILY_FILE_SETS["csharp_where"])
     named = nodes.filter(F.col("path") != "")
     ids = {r["name"]: r["id"] for r in named.collect()}
     assert "U" not in ids and "T" not in ids

@@ -3,6 +3,7 @@ tests/test_py_analyzer.py:8-60 (golden entities/edges from a tiny fixture)."""
 
 from __future__ import annotations
 
+from analyzer_files import PY_FILE_SETS
 from pyspark.sql import functions as F
 
 
@@ -73,28 +74,24 @@ def test_param_return_edges(fixture_graph):
     assert ("log", "None") in returns
 
 
-def test_qualified_resolution_prefers_local_definition(spark):
-    """Two same-named functions in different modules: a call site resolves
-    to the SAME-FILE definition first, then same-package, never just the
-    globally smallest id (approximates LSP def-site precision,
-    reference api/analyzers/analyzer.py:49-54)."""
-    from pyspark.sql import functions as F
-
+def _build(spark, files: dict[str, str]):
     from code_graph_backend_spark.sources.python_analyzer import (
         graph_from_parsed,
         parse_files,
     )
 
-    files = {
-        "pkg_a/helper.py": "def helper():\n    return 'a'\n",
-        "pkg_a/caller.py": "def helper():\n    return 'local'\n\ndef use():\n    return helper()\n",
-        "pkg_b/helper.py": "def helper():\n    return 'b'\n",
-        "pkg_b/other.py": "def use_b():\n    return helper()\n",
-    }
     df = spark.createDataFrame(
         [(p, s.encode()) for p, s in files.items()], "path string, content binary"
     )
-    nodes, edges = graph_from_parsed(spark, parse_files(df))
+    return graph_from_parsed(spark, parse_files(df))
+
+
+def test_qualified_resolution_prefers_local_definition(spark):
+    """Two same-named functions in different modules: a call site resolves
+    to the SAME-FILE definition first, then same-package, never just the
+    globally smallest id (approximates LSP def-site precision,
+    reference api/analyzers/analyzer.py:49-54)."""
+    nodes, edges = _build(spark, PY_FILE_SETS["qualified_resolution_prefers_local_definition"])
     by_key = {
         (r["name"], r["path"]): r["id"]
         for r in nodes.filter(F.col("path") != "").collect()
@@ -117,34 +114,12 @@ def test_qualified_resolution_prefers_local_definition(spark):
     assert not wrong
 
 
-def _build(spark, files: dict[str, str]):
-    from pyspark.sql import functions as F  # noqa: F401
-
-    from code_graph_backend_spark.sources.python_analyzer import (
-        graph_from_parsed,
-        parse_files,
-    )
-
-    df = spark.createDataFrame(
-        [(p, s.encode()) for p, s in files.items()], "path string, content binary"
-    )
-    return graph_from_parsed(spark, parse_files(df))
-
-
 def test_import_aware_resolution_follows_alias(spark):
     """`from m import f as g` binds g to m.f: the call through the alias
     resolves to the imported module's definition, beating a same-named
     function in ANOTHER package, and no spurious external node for the
     alias is created (reference LSP parity, api/analyzers/analyzer.py:49-54)."""
-    files = {
-        "pkg_a/util.py": "def calc():\n    return 'a'\n",
-        "pkg_b/util.py": "def calc():\n    return 'b'\n",
-        "app.py": (
-            "from pkg_a.util import calc as c\n\n"
-            "def run():\n    return c()\n"
-        ),
-    }
-    nodes, edges = _build(spark, files)
+    nodes, edges = _build(spark, PY_FILE_SETS["import_aware_resolution_follows_alias"])
     by_key = {(r["name"], r["path"]): r["id"] for r in nodes.collect()}
     calls = {(r["src"], r["dst"]) for r in edges.filter(F.col("type") == "CALLS").collect()}
     assert (by_key[("run", "app.py")], by_key[("calc", "pkg_a/util.py")]) in calls
@@ -157,15 +132,7 @@ def test_import_beats_same_package_candidate(spark):
     """An explicit `from pkg_b.util import calc` in pkg_a resolves to
     pkg_b's def even though a same-package pkg_a/util.py candidate exists
     (the same-named local in another module loses)."""
-    files = {
-        "pkg_a/util.py": "def calc():\n    return 'a'\n",
-        "pkg_a/app.py": (
-            "from pkg_b.util import calc\n\n"
-            "def run():\n    return calc()\n"
-        ),
-        "pkg_b/util.py": "def calc():\n    return 'b'\n",
-    }
-    nodes, edges = _build(spark, files)
+    nodes, edges = _build(spark, PY_FILE_SETS["import_beats_same_package_candidate"])
     by_key = {(r["name"], r["path"]): r["id"] for r in nodes.collect()}
     calls = {(r["src"], r["dst"]) for r in edges.filter(F.col("type") == "CALLS").collect()}
     assert (by_key[("run", "pkg_a/app.py")], by_key[("calc", "pkg_b/util.py")]) in calls
@@ -175,12 +142,7 @@ def test_import_beats_same_package_candidate(spark):
 def test_relative_import_resolves_within_package(spark):
     """`from .helpers import calc` in pkg/a.py resolves against pkg/ —
     a same-named helpers module in a sibling package loses."""
-    files = {
-        "pkg/helpers.py": "def calc():\n    return 1\n",
-        "pkg/a.py": "from .helpers import calc\n\ndef run():\n    return calc()\n",
-        "other/helpers.py": "def calc():\n    return 2\n",
-    }
-    nodes, edges = _build(spark, files)
+    nodes, edges = _build(spark, PY_FILE_SETS["relative_import_resolves_within_package"])
     by_key = {(r["name"], r["path"]): r["id"] for r in nodes.collect()}
     calls = {(r["src"], r["dst"]) for r in edges.filter(F.col("type") == "CALLS").collect()}
     assert (by_key[("run", "pkg/a.py")], by_key[("calc", "pkg/helpers.py")]) in calls
@@ -189,15 +151,7 @@ def test_relative_import_resolves_within_package(spark):
 
 def test_class_import_resolves_extends(spark):
     """EXTENDS through an imported base class follows the import binding."""
-    files = {
-        "lib/base.py": "class Base:\n    pass\n",
-        "app/models.py": (
-            "from lib.base import Base\n\n"
-            "class Model(Base):\n    pass\n"
-        ),
-        "app/base.py": "class Base:\n    pass\n",  # same-package decoy
-    }
-    nodes, edges = _build(spark, files)
+    nodes, edges = _build(spark, PY_FILE_SETS["class_import_resolves_extends"])
     by_key = {(r["name"], r["path"]): r["id"] for r in nodes.collect()}
     ext = {(r["src"], r["dst"]) for r in edges.filter(F.col("type") == "EXTENDS").collect()}
     assert (by_key[("Model", "app/models.py")], by_key[("Base", "lib/base.py")]) in ext
@@ -208,15 +162,7 @@ def test_from_dot_import_module_receiver(spark):
     """`from . import sibling; sibling.calc()` resolves calc into the
     sibling MODULE of the same package — a same-named def in another
     package loses (r3 verdict item 6: relative-import residual)."""
-    files = {
-        "pkg/sibling.py": "def calc():\n    return 1\n",
-        "pkg/user.py": (
-            "from . import sibling\n\n"
-            "def run():\n    return sibling.calc()\n"
-        ),
-        "other/noise.py": "def calc():\n    return 2\n",
-    }
-    nodes, edges = _build(spark, files)
+    nodes, edges = _build(spark, PY_FILE_SETS["from_dot_import_module_receiver"])
     by_key = {(r["name"], r["path"]): r["id"] for r in nodes.collect()}
     calls = {(r["src"], r["dst"]) for r in edges.filter(F.col("type") == "CALLS").collect()}
     assert (by_key[("run", "pkg/user.py")], by_key[("calc", "pkg/sibling.py")]) in calls
@@ -225,15 +171,7 @@ def test_from_dot_import_module_receiver(spark):
 
 def test_from_dotdot_import_module_receiver(spark):
     """`from .. import top` climbs one package level."""
-    files = {
-        "top.py": "def calc():\n    return 1\n",
-        "pkg/inner.py": (
-            "from .. import top\n\n"
-            "def run():\n    return top.calc()\n"
-        ),
-        "pkg/top.py": "def calc():\n    return 2\n",  # same-package decoy
-    }
-    nodes, edges = _build(spark, files)
+    nodes, edges = _build(spark, PY_FILE_SETS["from_dotdot_import_module_receiver"])
     by_key = {(r["name"], r["path"]): r["id"] for r in nodes.collect()}
     calls = {(r["src"], r["dst"]) for r in edges.filter(F.col("type") == "CALLS").collect()}
     assert (by_key[("run", "pkg/inner.py")], by_key[("calc", "top.py")]) in calls
@@ -244,16 +182,7 @@ def test_init_reexport_chain(spark):
     """`from pkg import helper` where pkg/__init__.py re-exports helper
     from pkg/a.py: the one-hop chain lands on the true def-site, beating
     a root-level decoy (the reference's LSP follows the chain natively)."""
-    files = {
-        "pkg/__init__.py": "from .a import helper\n",
-        "pkg/a.py": "def helper():\n    return 1\n",
-        "user.py": (
-            "from pkg import helper\n\n"
-            "def use():\n    return helper()\n"
-        ),
-        "decoy.py": "def helper():\n    return 2\n",
-    }
-    nodes, edges = _build(spark, files)
+    nodes, edges = _build(spark, PY_FILE_SETS["init_reexport_chain"])
     by_key = {(r["name"], r["path"]): r["id"] for r in nodes.collect()}
     calls = {(r["src"], r["dst"]) for r in edges.filter(F.col("type") == "CALLS").collect()}
     assert (by_key[("use", "user.py")], by_key[("helper", "pkg/a.py")]) in calls
@@ -264,15 +193,7 @@ def test_from_dot_import_symbol_in_init(spark):
     """`from . import cfg` where cfg is defined in the package __init__
     itself (no sibling module): the package __init__ is accepted as the
     def-site."""
-    files = {
-        "pkg/__init__.py": "def cfg():\n    return 1\n",
-        "pkg/user.py": (
-            "from . import cfg\n\n"
-            "def run():\n    return cfg()\n"
-        ),
-        "elsewhere/cfg.py": "def cfg():\n    return 2\n",
-    }
-    nodes, edges = _build(spark, files)
+    nodes, edges = _build(spark, PY_FILE_SETS["from_dot_import_symbol_in_init"])
     by_key = {(r["name"], r["path"]): r["id"] for r in nodes.collect()}
     calls = {(r["src"], r["dst"]) for r in edges.filter(F.col("type") == "CALLS").collect()}
     assert (by_key[("run", "pkg/user.py")], by_key[("cfg", "pkg/__init__.py")]) in calls
@@ -284,17 +205,7 @@ def test_init_reexport_two_hops_with_rename(spark):
     pkg/sub/__init__.py (renaming f→g), which re-exports from
     pkg/sub/impl.py: the two-hop chain lands on the true def-site,
     beating a root-level decoy."""
-    files = {
-        "pkg/__init__.py": "from .sub import f as g\n",
-        "pkg/sub/__init__.py": "from .impl import f\n",
-        "pkg/sub/impl.py": "def f():\n    return 1\n",
-        "user.py": (
-            "from pkg import g\n\n"
-            "def use():\n    return g()\n"
-        ),
-        "decoy.py": "def g():\n    return 2\n",
-    }
-    nodes, edges = _build(spark, files)
+    nodes, edges = _build(spark, PY_FILE_SETS["init_reexport_two_hops_with_rename"])
     by_key = {(r["name"], r["path"]): r["id"] for r in nodes.collect()}
     calls = {(r["src"], r["dst"]) for r in edges.filter(F.col("type") == "CALLS").collect()}
     assert (by_key[("use", "user.py")], by_key[("f", "pkg/sub/impl.py")]) in calls
@@ -305,19 +216,7 @@ def test_init_reexport_four_hops_with_renames(spark):
     """Bounded-fixpoint chain following (r4 verdict item 6): a four-level
     facade chain pkg → pkg.a → pkg.a.b → pkg.a.b.c with two renames lands
     on the true def-site; the previous two-hop unroll stopped short."""
-    files = {
-        "pkg/__init__.py": "from .a import h as top\n",
-        "pkg/a/__init__.py": "from .b import g as h\n",
-        "pkg/a/b/__init__.py": "from .c import f as g\n",
-        "pkg/a/b/c/__init__.py": "from .impl import f\n",
-        "pkg/a/b/c/impl.py": "def f():\n    return 1\n",
-        "user.py": (
-            "from pkg import top\n\n"
-            "def use():\n    return top()\n"
-        ),
-        "decoy.py": "def top():\n    return 2\n",
-    }
-    nodes, edges = _build(spark, files)
+    nodes, edges = _build(spark, PY_FILE_SETS["init_reexport_four_hops_with_renames"])
     by_key = {(r["name"], r["path"]): r["id"] for r in nodes.collect()}
     calls = {(r["src"], r["dst"]) for r in edges.filter(F.col("type") == "CALLS").collect()}
     assert (by_key[("use", "user.py")], by_key[("f", "pkg/a/b/c/impl.py")]) in calls
@@ -329,17 +228,7 @@ def test_sequential_rebinding_is_occurrence_sensitive(spark):
     site: `from a import f; use1(); from b import f; use2()` must send
     the first call to a.f and the second to b.f — never fan one call
     across both bindings or pick one binding for both calls."""
-    files = {
-        "a.py": "def f():\n    return 1\n",
-        "b.py": "def f():\n    return 2\n",
-        "user.py": (
-            "from a import f\n"
-            "def early():\n    return f()\n"
-            "from b import f\n"
-            "def late():\n    return f()\n"
-        ),
-    }
-    nodes, edges = _build(spark, files)
+    nodes, edges = _build(spark, PY_FILE_SETS["sequential_rebinding_is_occurrence_sensitive"])
     by_key = {(r["name"], r["path"]): r["id"] for r in nodes.collect()}
     calls = {(r["src"], r["dst"]) for r in edges.filter(F.col("type") == "CALLS").collect()}
     assert (by_key[("early", "user.py")], by_key[("f", "a.py")]) in calls
@@ -353,21 +242,7 @@ def test_conditional_reexport_facade_single_branch(spark):
     same name must chain a downstream import through ONE branch
     deterministically (first binding in file order — the try branch,
     what a static LSP reports), not duplicate the call edge."""
-    files = {
-        "pkg/__init__.py": (
-            "try:\n"
-            "    from ._fast import encode\n"
-            "except ImportError:\n"
-            "    from ._slow import encode\n"
-        ),
-        "pkg/_fast.py": "def encode():\n    return 1\n",
-        "pkg/_slow.py": "def encode():\n    return 2\n",
-        "user.py": (
-            "from pkg import encode\n\n"
-            "def run():\n    return encode()\n"
-        ),
-    }
-    nodes, edges = _build(spark, files)
+    nodes, edges = _build(spark, PY_FILE_SETS["conditional_reexport_facade_single_branch"])
     by_key = {(r["name"], r["path"]): r["id"] for r in nodes.collect()}
     calls = [
         (r["src"], r["dst"])
@@ -382,18 +257,7 @@ def test_conditional_import_at_use_site_no_duplicate_edges(spark):
     """try/except imports in the USING file itself: the call resolves
     once (nearest binding at-or-above the call is the except branch —
     the deterministic documented choice), with no duplicate edges."""
-    files = {
-        "fast.py": "def enc():\n    return 1\n",
-        "slow.py": "def enc():\n    return 2\n",
-        "user.py": (
-            "try:\n"
-            "    from fast import enc\n"
-            "except ImportError:\n"
-            "    from slow import enc\n"
-            "def go():\n    return enc()\n"
-        ),
-    }
-    nodes, edges = _build(spark, files)
+    nodes, edges = _build(spark, PY_FILE_SETS["conditional_import_at_use_site_no_duplicate_edges"])
     by_key = {(r["name"], r["path"]): r["id"] for r in nodes.collect()}
     calls = [
         (r["src"], r["dst"])
@@ -413,21 +277,7 @@ def test_conditional_reexport_with_renames_and_use_site_alias(spark):
     reports) → renamed def-site, landing on fast_encode — one edge, no
     fan-out across branches. This is the exact shape the r8 verdict
     called a documented divergence; it resolves."""
-    files = {
-        "pkg/__init__.py": (
-            "try:\n"
-            "    from ._fast import fast_encode as encode\n"
-            "except ImportError:\n"
-            "    from ._slow import slow_encode as encode\n"
-        ),
-        "pkg/_fast.py": "def fast_encode():\n    return 1\n",
-        "pkg/_slow.py": "def slow_encode():\n    return 2\n",
-        "user.py": (
-            "from pkg import encode as enc\n\n"
-            "def run():\n    return enc()\n"
-        ),
-    }
-    nodes, edges = _build(spark, files)
+    nodes, edges = _build(spark, PY_FILE_SETS["conditional_reexport_with_renames_and_use_site_alias"])
     by_key = {(r["name"], r["path"]): r["id"] for r in nodes.collect()}
     calls = [
         (r["src"], r["dst"])
@@ -441,12 +291,7 @@ def test_conditional_reexport_with_renames_and_use_site_alias(spark):
 def test_import_module_as_alias_attribute_call(spark):
     """`import pkg.mod as m` + `m.f()`: the module-alias binding routes
     the attribute call to the def-site in pkg/mod.py."""
-    files = {
-        "pkg/__init__.py": "",
-        "pkg/mod.py": "def f():\n    return 1\n",
-        "user.py": "import pkg.mod as m\n\ndef run():\n    return m.f()\n",
-    }
-    nodes, edges = _build(spark, files)
+    nodes, edges = _build(spark, PY_FILE_SETS["import_module_as_alias_attribute_call"])
     by_key = {(r["name"], r["path"]): r["id"] for r in nodes.collect()}
     calls = [(r["src"], r["dst"])
              for r in edges.filter(F.col("type") == "CALLS").collect()]
@@ -456,11 +301,7 @@ def test_import_module_as_alias_attribute_call(spark):
 def test_star_import_resolves_to_origin_module(spark):
     """`from lib import *` + a bare `g()` call resolves to lib.g — the
     LSP-grade behavior for the common star-import shape."""
-    files = {
-        "lib.py": "def g():\n    return 1\n",
-        "user.py": "from lib import *\n\ndef go():\n    return g()\n",
-    }
-    nodes, edges = _build(spark, files)
+    nodes, edges = _build(spark, PY_FILE_SETS["star_import_resolves_to_origin_module"])
     by_key = {(r["name"], r["path"]): r["id"] for r in nodes.collect()}
     calls = [(r["src"], r["dst"])
              for r in edges.filter(F.col("type") == "CALLS").collect()]
@@ -469,14 +310,7 @@ def test_star_import_resolves_to_origin_module(spark):
 
 def test_self_method_call_resolves_within_class(spark):
     """`self.b()` inside C.a resolves to the sibling method C.b."""
-    files = {
-        "cls.py": (
-            "class C:\n"
-            "    def a(self):\n        return self.b()\n"
-            "    def b(self):\n        return 2\n"
-        ),
-    }
-    nodes, edges = _build(spark, files)
+    nodes, edges = _build(spark, PY_FILE_SETS["self_method_call_resolves_within_class"])
     by_key = {(r["name"], r["path"]): r["id"] for r in nodes.collect()}
     calls = [(r["src"], r["dst"])
              for r in edges.filter(F.col("type") == "CALLS").collect()]
@@ -488,16 +322,7 @@ def test_nested_function_calls_and_containment_attribution(spark):
     call inside the inner function attributes to BOTH inner (its own
     body) and outer (span containment — the same per-entity scan
     convention as the c-family analyzers)."""
-    files = {
-        "user.py": (
-            "def outer():\n"
-            "    def inner():\n"
-            "        return leaf()\n"
-            "    return inner()\n\n"
-            "def leaf():\n    return 1\n"
-        ),
-    }
-    nodes, edges = _build(spark, files)
+    nodes, edges = _build(spark, PY_FILE_SETS["nested_function_calls_and_containment_attribution"])
     by_key = {(r["name"], r["path"]): r["id"] for r in nodes.collect()}
     calls = {(r["src"], r["dst"])
              for r in edges.filter(F.col("type") == "CALLS").collect()}
@@ -511,16 +336,7 @@ def test_nested_function_calls_and_containment_attribution(spark):
 def test_inherited_self_method_resolves_across_files(spark):
     """`self.hello()` in Child.greet resolves through the EXTENDS edge
     to Base.hello in another file — LSP-grade member resolution."""
-    files = {
-        "base.py": "class Base:\n    def hello(self):\n        return 1\n",
-        "child.py": (
-            "from base import Base\n\n"
-            "class Child(Base):\n"
-            "    def greet(self):\n"
-            "        return self.hello()\n"
-        ),
-    }
-    nodes, edges = _build(spark, files)
+    nodes, edges = _build(spark, PY_FILE_SETS["inherited_self_method_resolves_across_files"])
     by_key = {(r["name"], r["path"]): r["id"] for r in nodes.collect()}
     calls = [(r["src"], r["dst"])
              for r in edges.filter(F.col("type") == "CALLS").collect()]
@@ -537,21 +353,7 @@ def test_instantiation_classmethod_comprehension_resolution(spark):
     the class node, C.make() to the classmethod, a comprehension body
     call to its def-site, c.go() through local-variable type inference,
     and range() to the builtin callable node."""
-    files = {
-        "m.py": (
-            "class C:\n"
-            "    @classmethod\n"
-            "    def make(cls):\n        return 1\n"
-            "    def go(self):\n        return 2\n\n"
-            "def f():\n    return 3\n\n"
-            "def driver():\n"
-            "    c = C()\n"
-            "    a = C.make()\n"
-            "    xs = [f() for _ in range(3)]\n"
-            "    return c.go()\n"
-        ),
-    }
-    nodes, edges = _build(spark, files)
+    nodes, edges = _build(spark, PY_FILE_SETS["instantiation_classmethod_comprehension_resolution"])
     by_id = {r["id"]: (r["name"], r["path"]) for r in nodes.collect()}
     driver_id = next(i for i, (n, p) in by_id.items()
                      if n == "driver" and p == "m.py")
@@ -569,10 +371,7 @@ def test_instantiation_classmethod_comprehension_resolution(spark):
 def test_file_that_defines_nothing_gets_a_file_node(spark):
     """Every parsed file gets one File node (reference api/graph.py:392-406),
     also an empty package `__init__.py` that yields no entity or call rows."""
-    nodes, edges = _build(spark, {
-        "pkg/__init__.py": "",
-        "pkg/mod.py": "def f():\n    return 1\n",
-    })
+    nodes, edges = _build(spark, PY_FILE_SETS["file_that_defines_nothing_gets_a_file_node"])
     files = {
         (r["name"], r["path"])
         for r in nodes.filter(F.array_contains("labels", "File")).collect()

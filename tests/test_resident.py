@@ -130,7 +130,10 @@ def test_self_graph_answers_match_spark(self_svc):
     hubs = sorted(set(calls.keys.tolist()), key=lambda s: -len(calls.get(s)))[:4]
     most_called = r.most_called(1)[0]["name"]
     a, b = _leafward_names(r)
-    two_hop = [(s, d2) for s in hubs for d in calls.get(s)[:2] for d2 in calls.get(d)[:1]]
+    # callees that call something, so that each pair is two hops apart
+    # whatever order the edges were stored in
+    two_hop = [(s, calls.get(d)[0]) for s in hubs
+               for d in [d for d in calls.get(s) if calls.get(d)][:2]]
     ask = {
         "limits": [500, 7],
         "neighbors": [(hubs + hubs[:1] + [12345], None, None),  # repeated and missing seeds

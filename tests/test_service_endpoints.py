@@ -191,6 +191,29 @@ def test_repo_info_store_is_shared_through_the_file(svc, spark):
     assert svc.repo_info("fixture")["note"] == "from fresh"
 
 
+def test_repo_info_store_launches_no_spark_job(spark, tmp_path):
+    """The side store reads and writes on the driver: `set` and `delete`
+    launch no Spark job, and a table written by Spark still reads."""
+    import json
+
+    from code_graph_backend_spark.service.api import RepoInfoStore
+
+    (spark.createDataFrame([("old", json.dumps({"commit": "c0"}))], "repo string, info string")
+     .coalesce(1).write.parquet(str(tmp_path / "_repo_info.parquet")))
+    store, sc = RepoInfoStore(str(tmp_path)), spark.sparkContext
+    try:
+        sc.setJobGroup("info-store", "info-store")
+        assert store.get("old") == {"commit": "c0"}
+        store.set("new", commit="c1")
+        store.delete("old")
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert list(sc.statusTracker().getJobIdsForGroup("info-store")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    fresh = RepoInfoStore(str(tmp_path))
+    assert (fresh.get("new"), fresh.get("old")) == ({"commit": "c1"}, {})
+
+
 def test_delete_repo_releases_its_cached_state(svc, tmp_path):
     from code_graph_backend_spark import memo
     from code_graph_backend_spark.operators.traversal import _typed_edges
