@@ -32,7 +32,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
-from ..graph.model import PropertyGraph, local_row_count
+from ..graph.model import PropertyGraph
 from ..memo import cached, invalidate
 from ..operators import lookups, neighbors, search, traversal
 from ..operators.aggregates import counts
@@ -455,9 +455,6 @@ class CodeGraphService:
         )
         parsed = parse_files(files)
         nodes, edges = graph_from_parsed(self.spark, parsed)
-        # a graph resolved on the driver knows its size; one from the
-        # Spark plan is counted once stored
-        n, e = local_row_count(nodes), local_row_count(edges)
         g = PropertyGraph(self.spark, name, nodes, edges, root=self.root)
         try:
             g.save()
@@ -466,8 +463,7 @@ class CodeGraphService:
             # has the same plan, so Spark would serve this parse again
             parsed.unpersist()
         self._forget(name)
-        if n is None or e is None:
-            n, e = g.counts()
+        n, e = g.stored_counts()
         return {"repo": name, "nodes": n, "edges": e}
 
     def _materialize_repo(self, url_or_path: str, name: str | None) -> tuple[str, str]:

@@ -136,19 +136,41 @@ def _cands(defs: pd.DataFrame, is_ext: bool, dst_label) -> pd.DataFrame:
                          "tpath": defs["path"], "is_ext": is_ext, "dst_label": dst_label})
 
 
-def _pick(cands: pd.DataFrame) -> pd.DataFrame:
-    """The best candidate per (src, kind, target, line, text): import hit,
-    same file, same package, global, then external, smallest id last."""
-    rank = [
-        4 if ext else -1 if _imp_hit(sfx, t) else 0 if t == r else 1 if _dir(t) == _dir(r) else 2
-        for ext, sfx, t, r in zip(cands["is_ext"], cands["imp_suffix"], cands["tpath"],
-                                  cands["rpath"])
-    ]
-    return (
-        cands.assign(_rank=rank)
-        .sort_values(["_rank", "target_id"], kind="stable")
-        .drop_duplicates(["src", "kind", "target", "line", "text"])
-    )
+def _dirs(paths: pd.Series) -> np.ndarray:
+    """`_dir` of each path, computed once per distinct path."""
+    codes, uniq = pd.factorize(paths)
+    return np.array([_dir(q) for q in uniq], dtype=object)[codes]
+
+
+def _pick(refs: pd.DataFrame, cands: pd.DataFrame) -> pd.DataFrame:
+    """The best candidate per (src, kind, target, line, text) of `refs`:
+    import hit, same file, same package, global, then external, smallest
+    `target_id` last. The name join pairs row positions only, and an
+    import hit is tested once per distinct (suffix, path), so a name
+    defined in many files costs a few numbers per pairing."""
+    key = refs.groupby(["src", "kind", "target", "line", "text"], dropna=False,
+                       sort=False).ngroup().to_numpy()
+    pairs = pd.DataFrame({"r": np.arange(len(refs)), "target": refs["target"].to_numpy()}).merge(
+        pd.DataFrame({"c": np.arange(len(cands)), "target": cands["target"].to_numpy()}),
+        on="target")
+    r, c = pairs["r"].to_numpy(), pairs["c"].to_numpy()
+    tpath, rpath = cands["tpath"].to_numpy()[c], refs["rpath"].to_numpy()[r]
+    sfx_code, sfxs = pd.factorize(refs["imp_suffix"])
+    t_code, tpaths = pd.factorize(cands["tpath"])
+    n_t = max(len(tpaths), 1)
+    pair, inv = np.unique(sfx_code[r].astype(np.int64) * n_t + t_code[c], return_inverse=True)
+    hit = np.array([s >= 0 and _imp_hit(sfxs[s], tpaths[t])
+                    for s, t in zip(*np.divmod(pair, n_t))], dtype=bool)[inv]
+    rank = np.select(
+        [cands["is_ext"].to_numpy(bool)[c], hit, tpath == rpath,
+         _dirs(cands["tpath"])[c] == _dirs(refs["rpath"])[r]],
+        [4, -1, 0, 1], 2)
+    tid = cands["target_id"].to_numpy(np.int64)[c]
+    order = np.lexsort((tid, rank, key[r]))
+    k = key[r][order]
+    best = order[np.r_[True, k[1:] != k[:-1]]] if len(order) else order
+    return refs.iloc[r[best]][["src", "kind", "line", "text"]].reset_index(drop=True).assign(
+        target_id=tid[best], dst_label=cands["dst_label"].to_numpy()[c[best]])
 
 
 def resolve(p: pd.DataFrame) -> tuple[pd.DataFrame, pd.DataFrame]:
@@ -260,15 +282,14 @@ def resolve(p: pd.DataFrame) -> tuple[pd.DataFrame, pd.DataFrame]:
     target_cands = pd.concat([_cands(named, False, None), _cands(externals, True, None)])
 
     is_py = src["rpath"].str.endswith(".py")
-    py = src[is_py].merge(target_cands, on="target")
     cf = src[~is_py]
     types = named[named["label"].isin(("Class", "Interface", "Enum", "Struct"))]
     callables = named[named["label"].isin(("Function", "Method", "Constructor"))]
-    cf = pd.concat([
-        cf[cf["kind"] == "call"].merge(_cands(callables, False, None), on="target"),
-        cf[cf["kind"] != "call"].merge(_cands(types, False, types["label"]), on="target"),
-    ])
-    picked = pd.concat([_pick(py), _pick(cf)], ignore_index=True)
+    picked = pd.concat([
+        _pick(src[is_py], target_cands),
+        _pick(cf[cf["kind"] == "call"], _cands(callables, False, None)),
+        _pick(cf[cf["kind"] != "call"], _cands(types, False, types["label"])),
+    ], ignore_index=True)
     kind, dst_label = picked["kind"], picked["dst_label"]
     edge_type = np.select(
         [kind == "call", kind == "extends", kind == "implements", kind == "cs_base",

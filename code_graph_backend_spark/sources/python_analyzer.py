@@ -277,21 +277,25 @@ def graph_from_parsed(spark: SparkSession, parsed: DataFrame) -> tuple[DataFrame
     A parse of at most `ROW_CAP` rows is collected in one job and resolved
     on the driver (sources/local_resolver.py); the frames handed back are
     driver data, so no job runs until they are read. A larger parse is
-    resolved by the Spark plan below, which caches `parsed`: the caller
-    unpersists it once the graph is written."""
+    resolved by the Spark plan below. `parsed` is cached before the
+    collect, so the Spark plan reads the rows the collect parsed instead
+    of parsing the tree again; on that path the caller unpersists it once
+    the graph is written."""
     from . import local_resolver
 
+    parsed = parsed.cache()
     rows = local_resolver.collect_parse(parsed, ROW_CAP)
     if rows is None:
         return _spark_graph(parsed)
+    parsed.unpersist()
     nodes, edges = local_resolver.resolve(rows)
     return (local_resolver.to_frame(spark, nodes, NODES_SCHEMA),
             local_resolver.to_frame(spark, edges, EDGES_SCHEMA))
 
 
 def _spark_graph(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """The distributed second pass: resolution by name join."""
-    parsed = parsed.cache()
+    """The distributed second pass: resolution by name join. `parsed` is
+    read by several branches of the plan; `graph_from_parsed` caches it."""
     ent = parsed.filter(F.col("kind") == "entity")
 
     # Import-aware reference rewrite (J13): each file's import bindings

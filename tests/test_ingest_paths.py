@@ -16,8 +16,7 @@ from analyzer_files import CFAMILY_FILE_SETS, FIXTURE_PY, PY_FILE_SETS
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from code_graph_backend_spark.graph.model import local_row_count
-from code_graph_backend_spark.sources import python_analyzer
+from code_graph_backend_spark.sources import local_resolver, python_analyzer
 from code_graph_backend_spark.sources.source_scan import scan_source_tree
 
 
@@ -35,12 +34,13 @@ def _rows(df) -> list[tuple]:
 def _assert_paths_agree(spark, files) -> None:
     """`files(path, content)` resolved on the driver and by the Spark plan."""
     parsed = python_analyzer.parse_files(files)
-    nodes, edges = python_analyzer.graph_from_parsed(spark, parsed)
-    assert local_row_count(nodes) is not None  # the driver path ran
-    local = _rows(nodes), _rows(edges)
-    with mock.patch.object(python_analyzer, "ROW_CAP", 0):
+    with mock.patch.object(local_resolver, "resolve", wraps=local_resolver.resolve) as spy:
         nodes, edges = python_analyzer.graph_from_parsed(spark, parsed)
-    assert local_row_count(nodes) is None  # the Spark plan ran
+        assert spy.call_count == 1  # the driver path ran
+        local = _rows(nodes), _rows(edges)
+        with mock.patch.object(python_analyzer, "ROW_CAP", 0):
+            nodes, edges = python_analyzer.graph_from_parsed(spark, parsed)
+        assert spy.call_count == 1  # the Spark plan ran
     try:
         assert local[0] == _rows(nodes)
         assert local[1] == _rows(edges)
@@ -110,9 +110,10 @@ def _module_name(path: str) -> str:
 def packages(draw):
     """{path: source}: Python modules whose imports are absolute, aliased,
     relative (`from .m import f`, `from . import m`, `from .. import m`),
-    `__init__` re-exports and conditional rebindings (try/except), with
-    calls through names, aliases and module receivers; plus one Java or
-    C# file whose class and method names overlap the Python ones."""
+    `__init__` re-exports, conditional rebindings (try/except) and one
+    name rebound around a use, with calls through names, aliases and
+    module receivers; plus one Java or C# file whose class and method
+    names overlap the Python ones."""
     paths = draw(st.lists(st.sampled_from(MODULES), min_size=2, max_size=5, unique=True))
     name, module = st.sampled_from(NAMES), st.sampled_from(paths)
     siblings = st.sampled_from(["a", "b", "c", "sub", "top"])
@@ -146,6 +147,15 @@ def packages(draw):
 
     files = {p: "\n".join(statement() for _ in range(draw(st.integers(1, 5)))) + "\n"
              for p in paths}
+    # a name bound twice around a use: the call takes the import above it
+    # (a def in the second module); the one below names no module here,
+    # which would leave the same-file def to win
+    n, other = draw(name), paths[1]
+    files[other] += f"def {n}() -> str:\n    return 'b'\n"
+    files[paths[0]] += (f"from {_module_name(other)} import {n}\n"
+                        f"def use_{n}() -> str:\n    return {n}()\n"
+                        f"from nowhere import {n}\n"
+                        f"def {n}() -> str:\n    return 'a'\n")
     java = draw(st.booleans())
     decls = []
     for cls in draw(st.lists(st.sampled_from(["F", "G", "I"]), min_size=1, max_size=3,
@@ -182,23 +192,50 @@ def _jobs(spark, group: str, fn) -> int:
         sc.setLocalProperty("spark.jobGroup.id", None)
 
 
-def test_analyze_folder_job_budget(spark, tmp_path):
-    """Collect the parse, write nodes, write edges: an ingest under the cap
-    launches at most 4 jobs (the Spark plan launched about 59), and its
-    counts are the stored graph's."""
-    from code_graph_backend_spark.service import CodeGraphService
-
+def _package(tmp_path):
+    """8 modules of 6 functions that call each other: 58 nodes, 192 edges."""
     src = tmp_path / "pkg"
     src.mkdir()
     for i in range(8):
         (src / f"m{i}.py").write_text("".join(
             f"def f{i}_{j}(x: int) -> str:\n    return f{i}_{(j + 1) % 6}(x)\n\n"
             for j in range(6)))
+    return str(src)
+
+
+def test_analyze_folder_job_budget(spark, tmp_path):
+    """Collect the parse, write nodes, write edges: an ingest under the cap
+    launches at most 4 jobs (the Spark plan launched about 59), and its
+    counts are the stored graph's."""
+    from code_graph_backend_spark.service import CodeGraphService
+
+    src = _package(tmp_path)
     svc = CodeGraphService(spark, str(tmp_path / "store"))
     out = {}
     assert _jobs(spark, "ingest-budget",
-                 lambda: out.update(svc.analyze_folder(str(src), "budget"))) <= 4
+                 lambda: out.update(svc.analyze_folder(src, "budget"))) <= 4
     assert (out["nodes"], out["edges"]) == svc._graph("budget").counts() == (58, 192)
+
+
+def test_ingest_over_the_cap_parses_once(spark, tmp_path):
+    """Over the cap the Spark plan reads the parse cached by the collect,
+    not a second parse of the tree, and `analyze_folder` still reports
+    the stored graph's counts."""
+    from code_graph_backend_spark.service import CodeGraphService
+
+    spark_graph = python_analyzer._spark_graph
+    seen = []
+
+    def spy(parsed):
+        seen.append(parsed.is_cached)
+        return spark_graph(parsed)
+
+    svc = CodeGraphService(spark, str(tmp_path / "store"))
+    with mock.patch.object(python_analyzer, "ROW_CAP", 0), \
+            mock.patch.object(python_analyzer, "_spark_graph", spy):
+        out = svc.analyze_folder(_package(tmp_path), "over")
+    assert seen == [True]
+    assert (out["nodes"], out["edges"]) == svc._graph("over").counts() == (58, 192)
 
 
 def test_s2_cfamily_analyzer_job_budget(spark):
